@@ -45,7 +45,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kafka_denormalization_spark.engine import get_spark
+from kafka_denormalization_spark.engine import get_spark, session_cpus
 from kafka_denormalization_spark.queries import QUERIES
 
 # Headline set: the reference-parity pipeline + the heaviest extension ops.
@@ -269,6 +269,12 @@ def load_telemetry() -> dict:
         return {}
 
 
+def sidecar_cpus(sidecar: dict) -> int:
+    """Core count a BENCH_PHASES sidecar was recorded at; pre-r13
+    sidecars carry no ``cpus`` field and were all recorded at 32c."""
+    return sidecar.get("cpus", 32)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -329,14 +335,14 @@ def main() -> None:
     phases_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_PHASES.json"
     )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = session_cpus()
     # VERDICT r12 #4: a multi-config driver run (32c then 8c) used to
     # overwrite the one sidecar, so mover detection compared this run's
     # times against a DIFFERENT core count's priors and flagged spurious
     # movers. Priors now come from the same-cpus sidecar only (32c owns
     # BENCH_PHASES.json, other counts own BENCH_PHASES_c{N}.json), with
     # a cpus-field cross-check for pre-r13 sidecars (all 32c except the
-    # final 8c driver pass).
+    # final 8c driver pass, so a sidecar without the field is 32c).
     prior_path = (
         phases_path if cpus == 32
         else phases_path.replace(".json", f"_c{cpus}.json")
@@ -345,7 +351,7 @@ def main() -> None:
     try:
         with open(prior_path) as fh:
             prior = json.load(fh)
-        if prior.get("cpus", cpus) == cpus:
+        if sidecar_cpus(prior) == cpus:
             prior_timings = prior.get("queries", {}) or {}
     except Exception:  # first run / missing sidecar
         prior_timings = {}

@@ -73,6 +73,18 @@ def _configure_tws_protocol(builder: SparkSession.Builder) -> SparkSession.Build
     )
 
 
+def session_cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS`` when it is a positive
+    integer, else ``os.cpu_count()`` — a malformed value degrades
+    instead of crashing every session build."""
+    fallback = os.cpu_count() or 4
+    try:
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", fallback))
+    except ValueError:
+        return fallback
+    return n if n > 0 else fallback
+
+
 def get_spark(app_name: str = "kafka-denormalization-spark") -> SparkSession:
     """Build a SparkSession for local runs (tests / bench).
 
@@ -80,7 +92,7 @@ def get_spark(app_name: str = "kafka-denormalization-spark") -> SparkSession:
     runtime (coalesce + skew-join splitting), shuffle partitions sized to
     cores locally (a cluster deployment would size to executors*cores*2-3).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = session_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -27,7 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_denormalization_spark.checkpoint import truncate_lineage
+from kafka_denormalization_spark.checkpoint import (
+    plan_key,
+    session_memo,
+    truncate_lineage,
+)
 
 
 def connected_components(
@@ -103,9 +107,6 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-_CC_SESSION_MEMO: dict[tuple, DataFrame] = {}
-
-
 def connected_components_session(
     edges: DataFrame,
     src: str = "src",
@@ -122,32 +123,24 @@ def connected_components_session(
     queries re-deriving components of the one shared near-dup pair
     graph per bench run).
 
-    Keying follows ``minhash_lsh_pairs_session``: canonicalized-plan
-    semanticHash, with a plain un-memoized call as the Spark Connect
-    fallback and eviction of prior applications' entries. The memoized
-    frame is lineage-truncated (LogicalRDD over session-held blocks) —
+    Keying follows ``minhash_lsh_pairs_session``: the edges plan's
+    checkpoint.plan_key through checkpoint.session_memo, with a plain
+    un-memoized call as the Spark Connect fallback. The memoized frame
+    is lineage-truncated (LogicalRDD over session-held blocks) —
     callers must treat it as read-only shared state, exactly like the
     pair-table memo."""
-    from kafka_denormalization_spark.functions.similarity import (
-        _plan_semantic_key,
-    )
 
-    sem = _plan_semantic_key(edges)
-    if sem is None:  # pragma: no cover - Spark Connect fallback
+    def build() -> DataFrame:
         return connected_components(
             edges, src, dst, max_iter=max_iter, checkpoint_dir=checkpoint_dir
         )
-    app_id = edges.sparkSession.sparkContext.applicationId
-    key = (app_id, sem, src, dst, max_iter, checkpoint_dir)
-    for k in [k for k in list(_CC_SESSION_MEMO) if k[0] != app_id]:
-        _CC_SESSION_MEMO.pop(k, None)
-    labels = _CC_SESSION_MEMO.get(key)
-    if labels is None:
-        labels = connected_components(
-            edges, src, dst, max_iter=max_iter, checkpoint_dir=checkpoint_dir
-        )
-        _CC_SESSION_MEMO[key] = labels
-    return labels
+
+    sem = plan_key(edges)
+    if sem is None:  # pragma: no cover - Spark Connect fallback
+        return build()
+    return session_memo(
+        edges.sparkSession, ("cc", sem, src, dst, max_iter, checkpoint_dir), build
+    )
 
 
 def pagerank(

@@ -147,7 +147,6 @@ def preference_pair_dedup(
     join + anti-join instead of re-deriving MinHash signatures for both
     sides every time (the r11 bench's 4.1-4.6 s warm floor). The memoed
     side-pair tables are session-owned: nothing is unpersisted here.
-    Same-session same-data assumption: similarity._AUTO_CAP_MEMO block.
     """
     from kafka_denormalization_spark.checkpoint import (
         truncate_lineage,
@@ -209,7 +208,7 @@ def preference_pair_dedup(
     # side's stage tails (guide §2.6 — actions are only sequential
     # because driver code calls them sequentially). Spark's scheduler
     # handles concurrent jobs natively; the session memos they touch are
-    # keyed disjointly (different column name) and evict over snapshots.
+    # keyed disjointly (different column name).
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:

@@ -29,7 +29,12 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from ..checkpoint import persist_if_uncached, unpersist_if_owned
+from ..checkpoint import (
+    persist_if_uncached,
+    plan_key,
+    session_memo,
+    unpersist_if_owned,
+)
 from ..engine import parallelize_scan
 
 from kafka_denormalization_spark.functions.text import tokens
@@ -59,39 +64,6 @@ AUTO_BUCKET_FLOOR = 4096
 AUTO_BUCKET_CEIL = 16384
 
 
-# Probe-RESULT memo (VERDICT r10 #3): the eager auto-cap probe stays
-# eager (the lazy in-plan cap was built, measured, and REJECTED in r09 —
-# memory/lazy-guard-rejected), but its scalar result is memoized per
-# (applicationId, widths-plan semanticHash, wcol, floor, ceil) so
-# repeated builds of the SAME bucket pipeline — bench reps, a family
-# member re-deriving the same table+gram-config signatures, the doc+eval
-# double probe in fuzzy_contamination re-run in one session — skip the
-# probe job. The memo holds ints/None only: no executor storage pinned,
-# no unpersist-ownership interplay. semanticHash compares CANONICALIZED
-# plans, so two differently-built DataFrames over the same source with
-# identical semantics share an entry; a new applicationId evicts.
-#
-# SAME-SESSION SAME-DATA ASSUMPTION (ADVICE r11 #3, applies to every
-# plan-hash-keyed session memo in this repo: _AUTO_CAP_MEMO here,
-# _LSH_PAIRS_SESSION_MEMO below, queries.py _V3/_V4/_PAIRED memos):
-# the key is the CANONICALIZED PLAN, not the data. Re-building the same
-# plan over a mutated source — a parquet path overwritten or appended
-# to mid-session — replays the memoized result for the OLD data. That
-# is the correct trade for this engine's consumers (the driver, the
-# bench, and batch pipelines all read immutable snapshot directories);
-# a session that must re-read a mutable path should open a fresh
-# SparkSession (new applicationId evicts every memo) or call the
-# un-memoized builder directly.
-_AUTO_CAP_MEMO: dict[tuple, int | None] = {}
-
-
-def _plan_semantic_key(df: DataFrame) -> int | None:
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - Spark Connect has no _jdf
-        return None
-
-
 def resolve_auto_bucket_cap(
     widths: DataFrame, bands: int, wcol: str = "_w", what: str = "lsh"
 ) -> int | None:
@@ -108,52 +80,46 @@ def resolve_auto_bucket_cap(
     time, measured ~+0.7 s per guarded sf0.1 query, most of it the
     bucket-cache pre-population the main job then reuses): the lazy
     in-plan alternative was built and benchmarked in r09 and rejected —
-    see ``hot_bucket_table``."""
-    app_id = widths.sparkSession.sparkContext.applicationId
-    sem = _plan_semantic_key(widths)
-    memo_key = None
-    if sem is not None:
-        memo_key = (app_id, sem, wcol, AUTO_BUCKET_FLOOR, AUTO_BUCKET_CEIL)
-        for k in [k for k in list(_AUTO_CAP_MEMO) if k[0] != app_id]:
-            _AUTO_CAP_MEMO.pop(k, None)
-        if memo_key in _AUTO_CAP_MEMO:
-            cached_cap = _AUTO_CAP_MEMO[memo_key]
+    see ``hot_bucket_table``. The probe's RESULT is session-memoized
+    per widths plan (checkpoint.session_memo), so a repeated build of
+    the same bucket pipeline skips the probe job."""
+
+    def probe() -> int | None:
+        row = widths.agg(
+            F.percentile(F.col(wcol), F.lit(0.999)).alias("_p"),
+            F.max(wcol).alias("_mx"),
+        ).collect()[0]
+        mx = int(row["_mx"] or 0)
+        p999 = int(row["_p"] or 0)
+        cap = min(max(p999, AUTO_BUCKET_FLOOR), AUTO_BUCKET_CEIL)
+        if mx <= cap:
             _LOG.info(
-                "%s hot-bucket auto-guard: memoized probe result %s for "
-                "this bucket plan (session cache, no probe job)",
-                what, cached_cap,
+                "%s hot-bucket auto-guard: widest bucket %d <= cap %d "
+                "(p99.9=%d) — no split, exact banding guarantee kept",
+                what, mx, cap, p999,
             )
-            return cached_cap
-    row = widths.agg(
-        F.percentile(F.col(wcol), F.lit(0.999)).alias("_p"),
-        F.max(wcol).alias("_mx"),
-    ).collect()[0]
-    mx = int(row["_mx"] or 0)
-    p999 = int(row["_p"] or 0)
-    cap = min(max(p999, AUTO_BUCKET_FLOOR), AUTO_BUCKET_CEIL)
-    if mx <= cap:
-        _LOG.info(
-            "%s hot-bucket auto-guard: widest bucket %d <= cap %d "
-            "(p99.9=%d) — no split, exact banding guarantee kept",
-            what, mx, cap, p999,
+            return None
+        nsub_max = -(-mx // cap)
+        bound = 1.0 - (1.0 - 1.0 / nsub_max) ** bands
+        _LOG.warning(
+            "%s hot-bucket auto-guard ENGAGED: widest bucket %d > cap %d "
+            "(p99.9 width %d, floor %d, ceil %d); hot buckets split into "
+            "<=%d band-seeded sub-buckets — for a pair separated by a "
+            "split, P(still a candidate) >= %.4f across %d bands; unsplit "
+            "buckets keep the exact guarantee",
+            what, mx, cap, p999, AUTO_BUCKET_FLOOR, AUTO_BUCKET_CEIL,
+            nsub_max, bound, bands,
         )
-        if memo_key is not None:
-            _AUTO_CAP_MEMO[memo_key] = None
-        return None
-    nsub_max = -(-mx // cap)
-    bound = 1.0 - (1.0 - 1.0 / nsub_max) ** bands
-    _LOG.warning(
-        "%s hot-bucket auto-guard ENGAGED: widest bucket %d > cap %d "
-        "(p99.9 width %d, floor %d, ceil %d); hot buckets split into "
-        "<=%d band-seeded sub-buckets — for a pair separated by a "
-        "split, P(still a candidate) >= %.4f across %d bands; unsplit "
-        "buckets keep the exact guarantee",
-        what, mx, cap, p999, AUTO_BUCKET_FLOOR, AUTO_BUCKET_CEIL,
-        nsub_max, bound, bands,
+        return cap
+
+    sem = plan_key(widths)
+    if sem is None:  # pragma: no cover - Spark Connect fallback
+        return probe()
+    return session_memo(
+        widths.sparkSession,
+        ("auto_cap", sem, wcol, AUTO_BUCKET_FLOOR, AUTO_BUCKET_CEIL),
+        probe,
     )
-    if memo_key is not None:
-        _AUTO_CAP_MEMO[memo_key] = cap
-    return cap
 
 
 def hot_bucket_table(
@@ -800,21 +766,6 @@ def minhash_lsh_pairs(
     return verified
 
 
-# Verified-pair SESSION memo (VERDICT r11 #2): one signature + bucket +
-# verify build per (applicationId, docs-plan semanticHash, id_col,
-# text_col, gram/LSH config) for the whole session. The memoized value
-# is the EAGERLY MATERIALIZED verified pair table (tiny — near-dup
-# density is bounded) with every intermediate gram/bucket cache already
-# released (eager_cleanup), so the memo pins only the pair rows, the
-# _lsh_pairs_shared discipline applied one level down. This is what
-# lets the conversation/preference family share one turn-signature
-# build per session instead of re-deriving MinHash signatures and band
-# buckets on every call (pref_pair_dedup's 4.1-4.6 s warm floor in the
-# r11 bench was exactly this re-derivation). Same-session same-data
-# assumption: see the _AUTO_CAP_MEMO block above.
-_LSH_PAIRS_SESSION_MEMO: dict[tuple, DataFrame] = {}
-
-
 def minhash_lsh_pairs_session(
     docs: DataFrame,
     id_col: str,
@@ -832,43 +783,41 @@ def minhash_lsh_pairs_session(
     pair-table object without re-running the signature/bucket/verify
     pipeline.
 
-    Keying is by canonicalized-plan ``semanticHash`` — two
+    Keying is by canonicalized-plan :func:`~kafka_denormalization_spark.
+    checkpoint.plan_key` through ``checkpoint.session_memo`` — two
     differently-built frames with identical semantics share one entry;
     memoized frames derived via :func:`~kafka_denormalization_spark.
     checkpoint.truncate_lineage` keep a stable plan hash across calls
     because truncation is idempotent on the same object. When the hash
     is unavailable (Spark Connect), this degrades to a plain
-    un-memoized call. A new applicationId evicts prior sessions'
-    entries (their cached blocks died with the session).
+    un-memoized call. The memoized value is the eagerly materialized
+    verified pair table with every gram/bucket cache already released,
+    so the memo pins only the pair rows.
 
     Ownership: the memo owns the persisted pair table for the session;
     callers must NOT unpersist it (release would silently force every
     later family member to recompute). Callers needing private
     lifecycle control should call :func:`minhash_lsh_pairs` directly.
     """
-    sem = _plan_semantic_key(docs)
-    if sem is None:  # pragma: no cover - Spark Connect fallback
+
+    def build() -> DataFrame:
         return minhash_lsh_pairs(
             docs, id_col, text_col, n=n, num_hashes=num_hashes,
             bands=bands, threshold=threshold, eager_cleanup=True,
             max_bucket=max_bucket,
         )
-    app_id = docs.sparkSession.sparkContext.applicationId
-    key = (
-        app_id, sem, id_col, text_col, n, num_hashes, bands, threshold,
-        max_bucket,
+
+    sem = plan_key(docs)
+    if sem is None:  # pragma: no cover - Spark Connect fallback
+        return build()
+    return session_memo(
+        docs.sparkSession,
+        (
+            "lsh_pairs", sem, id_col, text_col, n, num_hashes, bands,
+            threshold, max_bucket,
+        ),
+        build,
     )
-    for k in [k for k in list(_LSH_PAIRS_SESSION_MEMO) if k[0] != app_id]:
-        _LSH_PAIRS_SESSION_MEMO.pop(k, None)
-    pairs = _LSH_PAIRS_SESSION_MEMO.get(key)
-    if pairs is None:
-        pairs = minhash_lsh_pairs(
-            docs, id_col, text_col, n=n, num_hashes=num_hashes,
-            bands=bands, threshold=threshold, eager_cleanup=True,
-            max_bucket=max_bucket,
-        )
-        _LSH_PAIRS_SESSION_MEMO[key] = pairs
-    return pairs
 
 
 # eval ids are namespaced away from document ids inside
@@ -2391,7 +2340,6 @@ def _cov_with_means(
     # once per query. One means pass + one products pass per session
     # now serve all three; both frames are dim-bounded (dim rows /
     # dim^2 rows), so the memo pins metadata-sized blocks only.
-    # Same-session same-data assumption: the _AUTO_CAP_MEMO block.
     from kafka_denormalization_spark.checkpoint import (
         truncate_lineage_session,
     )
@@ -2569,10 +2517,13 @@ def embedding_debias(
     """
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    # the per-row projection/residual folds run in the scan stage —
-    # parallelize a monolithic input (no-op on real layouts)
-    emb = parallelize_scan(emb, id_col)
+    # the covariance build gets the caller's input, as in
+    # embedding_covariance/embedding_pca, so all three share its
+    # session-memoized cuts; the per-row projection/residual folds run
+    # in the scan stage — parallelize a monolithic input (no-op on real
+    # layouts)
     cov, means = _cov_with_means(emb, vec_col, checkpoint_dir)
+    emb = parallelize_scan(emb, id_col)
     x, _nrm = _pca_power_model(cov.collect(), dim, n_iter)
     mu_by_pos = {r["pos"]: float(r["_mu"]) for r in means.collect()}
     model_pos = sorted(set(mu_by_pos) & set(x))

@@ -20,7 +20,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from .checkpoint import persist_if_uncached
+from .checkpoint import persist_if_uncached, session_memo
 
 from kafka_denormalization_spark.dsl import Denormalize
 from kafka_denormalization_spark.engine import (
@@ -1342,9 +1342,6 @@ def q_conv_pair_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("conv_id", "turn_idx", "n_eval_hits", "contaminated")
 
 
-_PAIRED_SURV_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _paired_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, n_merged) cross-modal retention survivors — connected
     components over the memoized audit's both-class pairs, min-id
@@ -1358,38 +1355,31 @@ def _paired_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components_session,
     )
 
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir)
-    for k in [k for k in list(_PAIRED_SURV_MEMO) if k[0] != app_id]:
-        _PAIRED_SURV_MEMO.pop(k, None)
-    memo = _PAIRED_SURV_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-
-    audit = q_paired_dedup(spark, sf_dir)
-    both = audit.filter(F.col("dup_class") == "both").select("id_a", "id_b")
-    comps = connected_components_session(both, src="id_a", dst="id_b")
-    sizes = comps.groupBy("component").agg(
-        F.count(F.lit(1)).cast("long").alias("n_merged")
-    )
-    dominated = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("id")
-    )
-    all_ids = table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id")
-    )
-    surv = truncate_lineage(
-        all_ids.join(dominated, "id", "left_anti")
-        .join(sizes.withColumnRenamed("component", "id"), "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("n_merged"), F.lit(1)).cast("long").alias(
-                "n_merged"
-            ),
+    def build() -> DataFrame:
+        audit = q_paired_dedup(spark, sf_dir)
+        both = audit.filter(F.col("dup_class") == "both").select("id_a", "id_b")
+        comps = connected_components_session(both, src="id_a", dst="id_b")
+        sizes = comps.groupBy("component").agg(
+            F.count(F.lit(1)).cast("long").alias("n_merged")
         )
-    )
-    _PAIRED_SURV_MEMO[memo_key] = surv
-    return surv
+        dominated = comps.filter(F.col("node") != F.col("component")).select(
+            F.col("node").alias("id")
+        )
+        all_ids = table(spark, sf_dir, "documents").select(
+            F.col("doc_id").alias("id")
+        )
+        return truncate_lineage(
+            all_ids.join(dominated, "id", "left_anti")
+            .join(sizes.withColumnRenamed("component", "id"), "id", "left")
+            .select(
+                "id",
+                F.coalesce(F.col("n_merged"), F.lit(1)).cast("long").alias(
+                    "n_merged"
+                ),
+            )
+        )
+
+    return session_memo(spark, ("paired_survivors", sf_dir), build)
 
 
 def q_paired_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1633,7 +1623,7 @@ def _pref_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     one assembly materialization per session serves all three pref
     queries AND keeps the truncated frame's object identity stable, so
     preference_pair_dedup's side-pair session memos
-    (similarity._LSH_PAIRS_SESSION_MEMO) hit across calls."""
+    (similarity.minhash_lsh_pairs_session) hit across calls."""
     from kafka_denormalization_spark.checkpoint import (
         truncate_lineage_session,
     )
@@ -1923,14 +1913,11 @@ def q_anti_join_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus near-dup pair table, via the generic session memo
-    (similarity.minhash_lsh_pairs_session — r12 unification: this
-    helper's private (applicationId, sf_dir) memo predated the
-    plan-hash-keyed one and duplicated its eviction discipline; the
-    documents-scan plan per sf_dir is stable, so the plan-hash key
-    subsumes the sf_dir key). eager_cleanup semantics are built in: the
-    memo pins only the materialized pair rows, never the gram/bucket
-    caches."""
+    """The corpus near-dup pair table, via
+    similarity.minhash_lsh_pairs_session (the documents-scan plan per
+    sf_dir is stable, so its plan-hash key subsumes an sf_dir key).
+    eager_cleanup semantics are built in: the memo pins only the
+    materialized pair rows, never the gram/bucket caches."""
     docs = table(spark, sf_dir, "documents")
     return sim_fns.minhash_lsh_pairs_session(
         docs, "doc_id", "text", num_hashes=64, bands=32, threshold=0.5
@@ -2620,21 +2607,15 @@ LM_NLL_CUTOFF = 3.42   # keeps ~70% at sf0.01; nll_r is grid-rounded so the
 V3_SALT = "temp3"      # comparison is deterministic on both engines
 
 
-_V3_MIXED_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _corpus_v3_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared v3 curation chain up to (and including) the
     temperature mix — rows still carry ``text_dedup``. Consumed by
     q_corpus_pipeline_v3 (which scrubs the text) and q_corpus_to_shards
     (which lays the shipped set out into training shards).
 
-    Memoized per (applicationId, sf_dir, resolved checkpoint dir) —
-    VERDICT r10 #2: the eager lineage-truncated stage frames are
-    per-call leaves, so without the memo every consumer re-ran the
-    whole chain. Same eviction discipline as _lsh_pairs_shared: a new
-    applicationId drops entries whose cached blocks died with their
-    session.
+    Session-memoized per (sf_dir, resolved checkpoint dir) — VERDICT
+    r10 #2: the eager lineage-truncated stage frames are per-call
+    leaves, so without the memo every consumer re-ran the whole chain.
 
     Multi-consumer frames (kept: lm_score training + the survivor
     join; surv: temperature's strata aggregate + sample filter) are
@@ -2653,49 +2634,41 @@ def _corpus_v3_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_denormalization_spark.operators.chunking import span_dedup
     from kafka_denormalization_spark.operators.sampling import temperature_sample
 
-    ckpt = resolve_checkpoint_dir(spark)
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir, ckpt)
-    for k in [k for k in list(_V3_MIXED_MEMO) if k[0] != app_id]:
-        _V3_MIXED_MEMO.pop(k, None)
-    memo = _V3_MIXED_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-    docs = table(spark, sf_dir, "documents")
-    sd = span_dedup(docs, "doc_id", "text", chunk_tokens=16)
-    kept = truncate_lineage(
-        sd.join(docs.select("doc_id", "lang", "source"), "doc_id")
-        .filter(
-            (F.lit(2) * F.col("n_dropped") <= F.col("n_chunks"))
-            & (F.length("text_dedup") > 0)
+    def build() -> DataFrame:
+        docs = table(spark, sf_dir, "documents")
+        sd = span_dedup(docs, "doc_id", "text", chunk_tokens=16)
+        kept = truncate_lineage(
+            sd.join(docs.select("doc_id", "lang", "source"), "doc_id")
+            .filter(
+                (F.lit(2) * F.col("n_dropped") <= F.col("n_chunks"))
+                & (F.length("text_dedup") > 0)
+            )
+            .select(
+                "doc_id", "lang", "source", "text_dedup",
+                F.length("text_dedup").cast("long").alias("n_chars_dedup"),
+            ),
+            ckpt,
         )
-        .select(
-            "doc_id", "lang", "source", "text_dedup",
-            F.length("text_dedup").cast("long").alias("n_chars_dedup"),
-        ),
-        ckpt,
-    )
-    lm = text_fns.lm_score(kept, "doc_id", "text_dedup", F.col("lang") == "en")
-    surv = truncate_lineage(
-        kept.join(
-            lm.filter(
-                (F.col("n_bigrams") >= 1) & (F.col("nll_r") <= LM_NLL_CUTOFF)
-            ).select("doc_id"),
-            "doc_id",
-        ),
-        ckpt,
-    )
-    mixed = temperature_sample(
-        surv, "lang", "n_chars_dedup", "doc_id",
-        alpha=0.5, salt=V3_SALT, budget_frac=TEMP_BUDGET_FRAC,
-    )
-    _V3_MIXED_MEMO[memo_key] = mixed
-    return mixed
+        lm = text_fns.lm_score(kept, "doc_id", "text_dedup", F.col("lang") == "en")
+        surv = truncate_lineage(
+            kept.join(
+                lm.filter(
+                    (F.col("n_bigrams") >= 1) & (F.col("nll_r") <= LM_NLL_CUTOFF)
+                ).select("doc_id"),
+                "doc_id",
+            ),
+            ckpt,
+        )
+        return temperature_sample(
+            surv, "lang", "n_chars_dedup", "doc_id",
+            alpha=0.5, salt=V3_SALT, budget_frac=TEMP_BUDGET_FRAC,
+        )
+
+    ckpt = resolve_checkpoint_dir(spark)
+    return session_memo(spark, ("v3_mixed", sf_dir, ckpt), build)
 
 
 V4_SALT = "temp4"
-
-_V4_STAGES_MEMO: dict[tuple, tuple] = {}
 
 
 def _corpus_v4_mixed(
@@ -2726,110 +2699,104 @@ def _corpus_v4_mixed(
     from kafka_denormalization_spark.operators.chunking import span_dedup
     from kafka_denormalization_spark.operators.sampling import temperature_sample
 
+    def build() -> tuple[DataFrame, dict[str, DataFrame]]:
+        def _stage(df):
+            # Every stage frame is EAGERLY lineage-truncated, always:
+            # (a) observability consumers (v4_funnel's counts,
+            #     v4_attribution's cascade) reference every stage inside one
+            #     plan — without the cut the analyzed plan repeats the whole
+            #     chain per stage and the plan TREE alone OOMs a default-1g
+            #     driver (measured: v4_funnel on a vanilla local[8]);
+            # (b) the lazy-persist alternative for the single-consumer
+            #     pipeline query was REMOVED in r10: AQE materializes a lazy
+            #     cache's readers concurrently before it populates and
+            #     re-computes stage subtrees per reader — fresh-session
+            #     one-shots at sf0.1 measured lazy 21.4-36.0 s vs eager
+            #     ~13 s total (docs/SCALE_NOTES.md "r10 v4 eager-vs-lazy").
+            # Stage frames take the RELIABLE (executor-loss-tolerant)
+            # checkpoint whenever a dir is configured — caller arg,
+            # $SPARK_GRAFT_CHECKPOINT_DIR, or the SparkContext's own
+            # setting; localCheckpoint otherwise (VERDICT r09 #7).
+            from kafka_denormalization_spark.checkpoint import truncate_lineage
+
+            return truncate_lineage(df, resolved_ckpt)
+
+        docs = table(spark, sf_dir, "documents")
+        # share_digest ON (VERDICT r09 #6): the line-digest explode + md5
+        # runs ONCE, feeding both the document-frequency aggregation and
+        # the removal join from one digest-sized cache. Re-measured r10
+        # with alternating 3x3 reps at sf0.1: 3.2-4.1 s OFF vs 2.3 s ON
+        # (~38% cut on the stage) — the r9 A/B that showed the persist
+        # barrier costing 2.3 s did not reproduce on an idle box (SCALE_NOTES
+        # "r10 line_dedup share_digest re-A/B"). The digest cache handle
+        # rides _sg_internal_cache; the eager staged path releases it as
+        # soon as the stage frame materializes, the lazy path carries it
+        # (125k 3-long rows at sf0.1 — noise next to the stage frames).
+        stripped = text_fns.line_dedup(
+            _docs_with_lines(spark, sf_dir), "doc_id", "lines",
+            min_docs=LINE_MIN_DOCS, share_digest=True,
+        )
+        docs4 = (
+            stripped.filter(F.col("n_lines_kept") > 0)
+            .join(docs.select("doc_id", "lang", "source"), "doc_id")
+            .select(
+                "doc_id", F.col("text_clean").alias("text"), "lang", "source"
+            )
+        )
+        docs4 = _stage(docs4)
+        digest_cache = getattr(stripped, "_sg_internal_cache", None)
+        if digest_cache is not None:
+            # _stage just materialized docs4 eagerly — the shared
+            # line-digest cache has no further consumer; release it now
+            # (ownership-aware: a session memo may hold the same plan)
+            unpersist_if_owned(digest_cache)
+        sd = span_dedup(docs4, "doc_id", "text", chunk_tokens=16)
+        kept = (
+            sd.join(docs4.select("doc_id", "lang", "source"), "doc_id")
+            .filter(
+                (F.lit(2) * F.col("n_dropped") <= F.col("n_chunks"))
+                & (F.length("text_dedup") > 0)
+            )
+            .select(
+                "doc_id", "lang", "source", "text_dedup",
+                F.length("text_dedup").cast("long").alias("n_chars_dedup"),
+            )
+        )
+        kept = _stage(kept)
+        lm = text_fns.lm_score(kept, "doc_id", "text_dedup", F.col("lang") == "en")
+        lm_surv = kept.join(
+            lm.filter(
+                (F.col("n_bigrams") >= 1) & (F.col("nll_r") <= LM_NLL_CUTOFF)
+            ).select("doc_id"),
+            "doc_id",
+        )
+        lm_surv = _stage(lm_surv)
+        nb = text_fns.nb_quality_score(
+            lm_surv, "doc_id", "text_dedup", F.col("source").isin(NB_SEED_SOURCES)
+        )
+        # temperature_sample reads its input twice (strata-weight agg +
+        # the sample filter) — without this persist the NB train+score
+        # chain re-runs per read (~2x its 3.9 s at sf0.1)
+        surv = lm_surv.join(
+            nb.filter(F.col("logodds_r") > 0).select("doc_id"), "doc_id"
+        )
+        surv = _stage(surv)
+        mixed = temperature_sample(
+            surv, "lang", "n_chars_dedup", "doc_id",
+            alpha=0.5, salt=V4_SALT, budget_frac=TEMP_BUDGET_FRAC,
+        )
+        stages = {
+            "input": docs,
+            "line_stripped": docs4,
+            "span_kept": kept,
+            "lm_survivors": lm_surv,
+            "nb_survivors": surv,
+            "shipped": mixed,
+        }
+        return mixed, stages
+
     resolved_ckpt = resolve_checkpoint_dir(spark, checkpoint_dir)
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir, resolved_ckpt)
-    for k in [k for k in list(_V4_STAGES_MEMO) if k[0] != app_id]:
-        _V4_STAGES_MEMO.pop(k, None)
-    memo = _V4_STAGES_MEMO.get(memo_key)
-    if memo is not None:
-        mixed, stages = memo
-        return (mixed, stages) if return_stages else mixed
-
-    def _stage(df):
-        # Every stage frame is EAGERLY lineage-truncated, always:
-        # (a) observability consumers (v4_funnel's counts,
-        #     v4_attribution's cascade) reference every stage inside one
-        #     plan — without the cut the analyzed plan repeats the whole
-        #     chain per stage and the plan TREE alone OOMs a default-1g
-        #     driver (measured: v4_funnel on a vanilla local[8]);
-        # (b) the lazy-persist alternative for the single-consumer
-        #     pipeline query was REMOVED in r10: AQE materializes a lazy
-        #     cache's readers concurrently before it populates and
-        #     re-computes stage subtrees per reader — fresh-session
-        #     one-shots at sf0.1 measured lazy 21.4-36.0 s vs eager
-        #     ~13 s total (docs/SCALE_NOTES.md "r10 v4 eager-vs-lazy").
-        # Stage frames take the RELIABLE (executor-loss-tolerant)
-        # checkpoint whenever a dir is configured — caller arg,
-        # $SPARK_GRAFT_CHECKPOINT_DIR, or the SparkContext's own
-        # setting; localCheckpoint otherwise (VERDICT r09 #7).
-        from kafka_denormalization_spark.checkpoint import truncate_lineage
-
-        return truncate_lineage(df, resolved_ckpt)
-
-    docs = table(spark, sf_dir, "documents")
-    # share_digest ON (VERDICT r09 #6): the line-digest explode + md5
-    # runs ONCE, feeding both the document-frequency aggregation and
-    # the removal join from one digest-sized cache. Re-measured r10
-    # with alternating 3x3 reps at sf0.1: 3.2-4.1 s OFF vs 2.3 s ON
-    # (~38% cut on the stage) — the r9 A/B that showed the persist
-    # barrier costing 2.3 s did not reproduce on an idle box (SCALE_NOTES
-    # "r10 line_dedup share_digest re-A/B"). The digest cache handle
-    # rides _sg_internal_cache; the eager staged path releases it as
-    # soon as the stage frame materializes, the lazy path carries it
-    # (125k 3-long rows at sf0.1 — noise next to the stage frames).
-    stripped = text_fns.line_dedup(
-        _docs_with_lines(spark, sf_dir), "doc_id", "lines",
-        min_docs=LINE_MIN_DOCS, share_digest=True,
-    )
-    docs4 = (
-        stripped.filter(F.col("n_lines_kept") > 0)
-        .join(docs.select("doc_id", "lang", "source"), "doc_id")
-        .select(
-            "doc_id", F.col("text_clean").alias("text"), "lang", "source"
-        )
-    )
-    docs4 = _stage(docs4)
-    digest_cache = getattr(stripped, "_sg_internal_cache", None)
-    if digest_cache is not None:
-        # _stage just materialized docs4 eagerly — the shared
-        # line-digest cache has no further consumer; release it now
-        # (ownership-aware: a session memo may hold the same plan)
-        unpersist_if_owned(digest_cache)
-    sd = span_dedup(docs4, "doc_id", "text", chunk_tokens=16)
-    kept = (
-        sd.join(docs4.select("doc_id", "lang", "source"), "doc_id")
-        .filter(
-            (F.lit(2) * F.col("n_dropped") <= F.col("n_chunks"))
-            & (F.length("text_dedup") > 0)
-        )
-        .select(
-            "doc_id", "lang", "source", "text_dedup",
-            F.length("text_dedup").cast("long").alias("n_chars_dedup"),
-        )
-    )
-    kept = _stage(kept)
-    lm = text_fns.lm_score(kept, "doc_id", "text_dedup", F.col("lang") == "en")
-    lm_surv = kept.join(
-        lm.filter(
-            (F.col("n_bigrams") >= 1) & (F.col("nll_r") <= LM_NLL_CUTOFF)
-        ).select("doc_id"),
-        "doc_id",
-    )
-    lm_surv = _stage(lm_surv)
-    nb = text_fns.nb_quality_score(
-        lm_surv, "doc_id", "text_dedup", F.col("source").isin(NB_SEED_SOURCES)
-    )
-    # temperature_sample reads its input twice (strata-weight agg +
-    # the sample filter) — without this persist the NB train+score
-    # chain re-runs per read (~2x its 3.9 s at sf0.1)
-    surv = lm_surv.join(
-        nb.filter(F.col("logodds_r") > 0).select("doc_id"), "doc_id"
-    )
-    surv = _stage(surv)
-    mixed = temperature_sample(
-        surv, "lang", "n_chars_dedup", "doc_id",
-        alpha=0.5, salt=V4_SALT, budget_frac=TEMP_BUDGET_FRAC,
-    )
-    stages = {
-        "input": docs,
-        "line_stripped": docs4,
-        "span_kept": kept,
-        "lm_survivors": lm_surv,
-        "nb_survivors": surv,
-        "shipped": mixed,
-    }
-    _V4_STAGES_MEMO[memo_key] = (mixed, stages)
+    mixed, stages = session_memo(spark, ("v4_stages", sf_dir, resolved_ckpt), build)
     return (mixed, stages) if return_stages else mixed
 
 
@@ -4538,10 +4505,6 @@ def _thumb_stats(resized: DataFrame) -> DataFrame:
     )
 
 
-_PAIRED_AUDIT_MEMO: dict[tuple, DataFrame] = {}
-_PAIRED_FRAME_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _paired_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The encoded (id, blob, caption) cross-modal fixture, memoized per
     (applicationId, sf_dir): documents become image-text pairs — the
@@ -4560,66 +4523,59 @@ def _paired_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_image_blob,
     )
 
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir)
-    for k in [k for k in list(_PAIRED_FRAME_MEMO) if k[0] != app_id]:
-        _PAIRED_FRAME_MEMO.pop(k, None)
-    memo = _PAIRED_FRAME_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
+    def build() -> DataFrame:
+        base = table(spark, sf_dir, "documents")
+        # image-group count scales with the corpus (constant ~13-doc group
+        # size — the image_phash_dedup scale-up convention): fixed groups
+        # would make every group a width-n/37 near-clique, and the audit's
+        # pair output (and its candidate-bounded Jaccard fill) would grow
+        # quadratically in corpus size; the count is a 1-row aggregate the
+        # oracle replays as a scalar subquery. 500 docs -> 37 groups, so
+        # sf0.01 results are unchanged.
+        n_docs = base.count()
+        groups = PHASH_GROUPS * max(1, math.ceil(n_docs / 500))
+        # repartition the single-task documents scan so the image synthesis
+        # (and every downstream blob consumer reading this persisted frame)
+        # runs at session parallelism (r12, guide §2.5 — the _blob_seed_ids
+        # remedy; rows here carry text too, so the repartition is inline)
+        nparts = target_partitions(spark)
+        docs = base.select(
+            "doc_id",
+            F.col("text"),
+            (
+                F.conv(
+                    F.substring(F.md5(F.substring("text", 1, 64)), 1, 8), 16, 10
+                ).cast("long")
+                % groups
+            ).alias("_s"),
+        ).repartition(nparts, "doc_id")
 
-    base = table(spark, sf_dir, "documents")
-    # image-group count scales with the corpus (constant ~13-doc group
-    # size — the image_phash_dedup scale-up convention): fixed groups
-    # would make every group a width-n/37 near-clique, and the audit's
-    # pair output (and its candidate-bounded Jaccard fill) would grow
-    # quadratically in corpus size; the count is a 1-row aggregate the
-    # oracle replays as a scalar subquery. 500 docs -> 37 groups, so
-    # sf0.01 results are unchanged.
-    n_docs = base.count()
-    groups = PHASH_GROUPS * max(1, math.ceil(n_docs / 500))
-    # repartition the single-task documents scan so the image synthesis
-    # (and every downstream blob consumer reading this persisted frame)
-    # runs at session parallelism (r12, guide §2.5 — the _blob_seed_ids
-    # remedy; rows here carry text too, so the repartition is inline)
-    nparts = target_partitions(spark)
-    docs = base.select(
-        "doc_id",
-        F.col("text"),
-        (
-            F.conv(
-                F.substring(F.md5(F.substring("text", 1, 64)), 1, 8), 16, 10
-            ).cast("long")
-            % groups
-        ).alias("_s"),
-    ).repartition(nparts, "doc_id")
+        def encode(batches):
+            # each distinct (seed, flip) grid is built ONCE per task and
+            # shared across its rows (r12 — the fake_*_blob dedup pattern;
+            # ~2 x `groups` variants vs one synthesis per document)
+            cache: dict[tuple[int, bool], bytes] = {}
 
-    def encode(batches):
-        # each distinct (seed, flip) grid is built ONCE per task and
-        # shared across its rows (r12 — the fake_*_blob dedup pattern;
-        # ~2 x `groups` variants vs one synthesis per document)
-        cache: dict[tuple[int, bool], bytes] = {}
+            def blob(s: int, flip: bool) -> bytes:
+                k = (s, flip)
+                b = cache.get(k)
+                if b is None:
+                    b = make_image_blob(PHASH_W, PHASH_H, _paired_pixels(s, flip))
+                    cache[k] = b
+                return b
 
-        def blob(s: int, flip: bool) -> bytes:
-            k = (s, flip)
-            b = cache.get(k)
-            if b is None:
-                b = make_image_blob(PHASH_W, PHASH_H, _paired_pixels(s, flip))
-                cache[k] = b
-            return b
+            for pdf in batches:
+                rows = [
+                    (int(d), blob(int(s), int(d) % 5 == 0), t)
+                    for d, s, t in zip(pdf["doc_id"], pdf["_s"], pdf["text"])
+                ]
+                yield pd.DataFrame(rows, columns=["id", "blob", "caption"])
 
-        for pdf in batches:
-            rows = [
-                (int(d), blob(int(s), int(d) % 5 == 0), t)
-                for d, s, t in zip(pdf["doc_id"], pdf["_s"], pdf["text"])
-            ]
-            yield pd.DataFrame(rows, columns=["id", "blob", "caption"])
+        return persist_if_uncached(
+            docs.mapInPandas(encode, "id long, blob binary, caption string")
+        )
 
-    paired = persist_if_uncached(
-        docs.mapInPandas(encode, "id long, blob binary, caption string")
-    )
-    _PAIRED_FRAME_MEMO[memo_key] = paired
-    return paired
+    return session_memo(spark, ("paired_frame", sf_dir), build)
 
 
 def q_paired_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4647,50 +4603,43 @@ def q_paired_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         paired_near_dup_audit,
     )
 
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir)
-    for k in [k for k in list(_PAIRED_AUDIT_MEMO) if k[0] != app_id]:
-        _PAIRED_AUDIT_MEMO.pop(k, None)
-    memo = _PAIRED_AUDIT_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
+    def build() -> DataFrame:
+        # fixture + persist discipline live in _paired_frame (shared with
+        # the composed q_multimodal_to_shards lane)
+        paired = _paired_frame(spark, sf_dir)
+        # caption side: the session-memoized corpus LSH pair table (same
+        # ids, same 64x32 params, same 0.5 threshold — shared with
+        # minhash_lsh_dedup and the whole near-dup family) instead of a
+        # second signature pipeline; bench A/B: 19.9 s -> the image side +
+        # fills only
+        from kafka_denormalization_spark.checkpoint import truncate_lineage
 
-    # fixture + persist discipline live in _paired_frame (shared with
-    # the composed q_multimodal_to_shards lane)
-    paired = _paired_frame(spark, sf_dir)
-    # caption side: the session-memoized corpus LSH pair table (same
-    # ids, same 64x32 params, same 0.5 threshold — shared with
-    # minhash_lsh_dedup and the whole near-dup family) instead of a
-    # second signature pipeline; bench A/B: 19.9 s -> the image side +
-    # fills only
-    from kafka_denormalization_spark.checkpoint import truncate_lineage
+        audit = paired_near_dup_audit(
+            paired,
+            "id",
+            "blob",
+            "caption",
+            hamming_max=3,
+            threshold=0.5,
+            num_hashes=64,
+            bands=32,
+            caption_pairs=_lsh_pairs_shared(spark, sf_dir),
+        ).select(
+            F.col("id_a"), F.col("id_b"), "hamming", "jaccard_r", "dup_class"
+        )
+        # EAGERLY truncate the memoized audit (r12): the audit's metric
+        # fill-ins (hamming for caption-only pairs, candidate-bounded
+        # Jaccard for image-only pairs) are the lazy tail ABOVE the
+        # operator's internal pair-union truncation, and every consumer
+        # (this query's exec, q_multimodal_attribution's explode,
+        # q_multimodal_funnel's counts, _paired_survivors' components)
+        # re-executed them per action — ~2-3 s each at sf0.1. One
+        # materialization at memo time serves the session; the frame is
+        # near-dup-pair-bounded, the same class the internal truncation
+        # already stores.
+        return truncate_lineage(audit)
 
-    audit = paired_near_dup_audit(
-        paired,
-        "id",
-        "blob",
-        "caption",
-        hamming_max=3,
-        threshold=0.5,
-        num_hashes=64,
-        bands=32,
-        caption_pairs=_lsh_pairs_shared(spark, sf_dir),
-    ).select(
-        F.col("id_a"), F.col("id_b"), "hamming", "jaccard_r", "dup_class"
-    )
-    # EAGERLY truncate the memoized audit (r12): the audit's metric
-    # fill-ins (hamming for caption-only pairs, candidate-bounded
-    # Jaccard for image-only pairs) are the lazy tail ABOVE the
-    # operator's internal pair-union truncation, and every consumer
-    # (this query's exec, q_multimodal_attribution's explode,
-    # q_multimodal_funnel's counts, _paired_survivors' components)
-    # re-executed them per action — ~2-3 s each at sf0.1. One
-    # materialization at memo time serves the session; the frame is
-    # near-dup-pair-bounded, the same class the internal truncation
-    # already stores.
-    audit = truncate_lineage(audit)
-    _PAIRED_AUDIT_MEMO[memo_key] = audit
-    return audit
+    return session_memo(spark, ("paired_audit", sf_dir), build)
 
 
 def q_multimodal_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4707,7 +4656,7 @@ def q_multimodal_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     training run would consume, as a pure function of the raw corpus.
 
     Rides every session memo in the family: the paired frame
-    (_paired_frame), the audit (_PAIRED_AUDIT_MEMO via q_paired_dedup),
+    (_paired_frame), the audit (q_paired_dedup),
     the caption pair table (_lsh_pairs_shared), and the retention
     survivors (_paired_survivors) — composition adds one resize pass
     and one shard-id exchange.
@@ -5145,36 +5094,28 @@ def q_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Z_ROWS_PER_SHARD = 1000
 
-_Z_PLAN_MEMO: dict[tuple, DataFrame] = {}
-
 
 def _z_order_plan_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events z-order layout table, materialized once per
     (applicationId, sf_dir) — r13, the `_containment_pairs_shared`
     discipline: q_z_order_layout, q_z_order_stats and q_z_order_prune
     each re-derived the identical banded-rank layout (bounds collect +
-    band window + prefix-sum join, ~2-3 s apiece at sf0.1). A dict memo
-    (not the plan-hash one) so repeat calls also skip the eager
+    band window + prefix-sum join, ~2-3 s apiece at sf0.1). Keyed on
+    sf_dir, not on a plan hash, so repeat calls also skip the eager
     dimension-bounds collect inside z_order_plan."""
     from kafka_denormalization_spark.checkpoint import truncate_lineage
     from kafka_denormalization_spark.operators.sharding import z_order_plan
 
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir)
-    for k in [k for k in list(_Z_PLAN_MEMO) if k[0] != app_id]:
-        _Z_PLAN_MEMO.pop(k, None)
-    memo = _Z_PLAN_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-    ev = events_table(spark, sf_dir)
-    plan = truncate_lineage(
-        z_order_plan(
-            ev, "event_id", "user_id", "ts_us",
-            rows_per_shard=Z_ROWS_PER_SHARD,
-        ).select("event_id", "user_id", "ts_us", "z", "shard_id", "pos")
-    )
-    _Z_PLAN_MEMO[memo_key] = plan
-    return plan
+    def build() -> DataFrame:
+        ev = events_table(spark, sf_dir)
+        return truncate_lineage(
+            z_order_plan(
+                ev, "event_id", "user_id", "ts_us",
+                rows_per_shard=Z_ROWS_PER_SHARD,
+            ).select("event_id", "user_id", "ts_us", "z", "shard_id", "pos")
+        )
+
+    return session_memo(spark, ("z_plan", sf_dir), build)
 
 
 def q_z_order_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5831,54 +5772,46 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # window rewrite, MinHash signature-stage rewrite, incremental-dedup
 # oracle NULL-symmetry) so regressions surface in the driver artifact.
 _DRIVER_HEAD = [
-    # --- r13 head ---
+    # --- r14 head ---
     # Selection rule (mechanical, from the CORRECTNESS_r*.json union,
-    # freshness histogram at rotation time r08:10 r09:50 r10:49 r11:50
-    # r12:50):
-    # (a) ALL 10 names whose freshest driver check is r08 — past the
+    # freshness histogram at rotation time r09:14 r10:48 r11:50
+    # r12:47 r13:50):
+    # (a) ALL 14 names whose freshest driver check is r09 — past the
     #     4-round staleness bound (tests/test_entry.py
-    #     test_driver_head_rotation_policy) at round 13; exactly the
-    #     set the r12 head comment pre-announced as round-13-mandatory;
-    # (b) 36 of the 50 r09-fresh names (due at round 14 otherwise) —
-    #     getting ahead of the tripwire, VERDICT r11 #1 precedent.
-    #     The 14 r09 names NOT rotated each yield their slot because an
-    #     included name exercises the same code path, and all 14 are
-    #     FIRST in line (mandatory) for the round-14 head:
-    #     bm25_search (same Okapi scoring kernel as the included
-    #     bm25_batch), copurchase_degree (same _copurchase_edges
-    #     self-join as the included copurchase_pagerank — the changed
-    #     path), and 12 TPC-H micro-shapes (big_orders,
-    #     customer_distribution, disjunctive_revenue, exists_late_ship,
-    #     forecast_revenue, idle_rich_customers, late_shipment_priority,
-    #     min_cost_per_part, promo_revenue, small_qty_revenue,
-    #     top_supplier, volume_shipping) whose single-join/agg/window
-    #     physics the included nation_year_revenue / returned_items /
-    #     moving_average cover;
-    # (c) 4 names rotated in early because THIS round rewrites their
-    #     hot path (changed code paths sit in the head):
-    #     copurchase_pagerank (pagerank degree-join hoist + lazy ranks
-    #     init), contamination_scan_join (filter-before-dedup gram
-    #     probe), z_order_layout / z_order_prune (shared session-
-    #     memoized layout table; z_order_stats is in (a)).
-    # (a) r08-stale, alphabetical — mandatory
-    "audio_dedup", "audio_stats", "conv_turn_dedup", "cosine_dedup",
-    "embedding_centroid", "embedding_debias", "grouping_sets",
-    "near_dedup_docs", "semantic_dedup", "z_order_stats",
-    # (b) r09 cohort, alphabetical
-    "ann_int8_topk", "bm25_batch", "bpe_merges", "bpe_token_counts",
-    "cluster_dedup_best", "containment_dedup", "conv_dedup",
-    "corpus_pipeline_v2", "corpus_pipeline_v3", "corpus_report",
-    "corpus_to_shards", "dsir_sample", "dsir_weights", "epoch_mixture",
-    "gram_novelty", "incremental_dedup", "incremental_near_dedup",
-    "kmeans_clusters", "leakage_safe_split", "lm_perplexity",
-    "moving_average", "nation_year_revenue", "oov_rate",
-    "packing_stats", "paired_retention", "percentile_profile",
-    "pii_scrub", "quantize_embeddings", "returned_items",
-    "rolling_zscore", "scd2_intervals", "shard_plan", "shard_stats",
-    "span_dedup", "temperature_sample", "user_journeys",
+    #     test_driver_head_rotation_policy) at round 14; exactly the
+    #     set the r13 head comment pre-announced as round-14-mandatory;
+    # (b) 34 of the 48 r10-fresh names (due at round 15 otherwise) —
+    #     getting ahead of the tripwire. The 14 r10 names NOT rotated
+    #     are FIRST in line (mandatory) for the round-15 head:
+    #     agg_pricing_summary, bpe_sequence_packing, canonical_dedup,
+    #     cluster_dedup_docs, denorm_full_outer, distinct_pairs,
+    #     doc_tokens_v2, lang_id_v2, rekey_select_key,
+    #     video_fingerprint, video_keyframes, video_stats, vocab_topk,
+    #     window_running_total;
+    # (c) 2 names rotated in early because THIS round changes their
+    #     path: embedding_debias (now shares the covariance build with
+    #     embedding_covariance/embedding_pca) and corpus_pipeline_v4
+    #     (its stage frames ride the one checkpoint.session_memo).
+    # (a) r09-stale, alphabetical — mandatory
+    "big_orders", "bm25_search", "copurchase_degree",
+    "customer_distribution", "disjunctive_revenue", "exists_late_ship",
+    "forecast_revenue", "idle_rich_customers", "late_shipment_priority",
+    "min_cost_per_part", "promo_revenue", "small_qty_revenue",
+    "top_supplier", "volume_shipping",
+    # (b) r10 cohort, alphabetical
+    "agg_fanout_topk", "ann_cosine_topk", "anti_join_orphans",
+    "asof_join", "audio_segments", "bpe_doc_tokens",
+    "containment_clusters", "contamination_scan", "conv_near_dedup",
+    "conv_response_contamination", "copurchase_triangles", "dedup_exact",
+    "denorm_inner", "denorm_nested_struct", "fingerprint",
+    "fuzzy_contamination", "join_key_digest", "json_parse",
+    "keyword_extraction", "latest_per_key", "market_share",
+    "ngram_jaccard_pairs", "pref_length_bias", "pref_pairs",
+    "rollup_pricing", "sessionize", "sliding_window", "text_clean",
+    "topk_per_group", "video_dedup", "video_frame_sample",
+    "video_scenes", "waiting_suppliers", "winnowing",
     # (c) changed-code-path early rotation
-    "copurchase_pagerank", "contamination_scan_join",
-    "z_order_layout", "z_order_prune",
+    "embedding_debias", "corpus_pipeline_v4",
 ]
 assert len(_DRIVER_HEAD) == 50, len(_DRIVER_HEAD)
 assert set(_DRIVER_HEAD) <= set(QUERIES), set(_DRIVER_HEAD) - set(QUERIES)

@@ -38,13 +38,19 @@ _HEAVY_LAST_MODULES = (
     "test_streaming",
     "test_property",
 )
+_RUN_ORDER = {name: i for i, name in enumerate(_HEAVY_LAST_MODULES)}
+
+
+def run_order(item) -> int:
+    """Sort key: a heavy module's position in _HEAVY_LAST_MODULES, -1
+    for every other item — including items without a module (doctest
+    or plugin items), which must not crash collection."""
+    module = getattr(item, "module", None)
+    return _RUN_ORDER.get(getattr(module, "__name__", None), -1)
 
 
 def pytest_collection_modifyitems(config, items):
-    order = {name: i for i, name in enumerate(_HEAVY_LAST_MODULES)}
-    items.sort(
-        key=lambda it: order.get(it.module.__name__, -1)
-    )
+    items.sort(key=run_order)
 
 
 @pytest.fixture(scope="session")

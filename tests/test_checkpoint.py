@@ -1,4 +1,5 @@
-"""checkpoint.py contracts: persist ownership + reliable-dir stability.
+"""checkpoint.py contracts: persist ownership, reliable-dir stability and
+the session memo.
 
 ADVICE r10 #2 repro: persist_if_uncached's skip path (an identical
 canonicalized plan is already cached) must not let the SECOND caller's
@@ -143,3 +144,148 @@ def test_truncate_lineage_session_memoizes_identical_plans(spark):
         spark.range(256).selectExpr("id", "id % 7 AS g")
     )
     assert t3 is not t1
+
+
+def _fake_session(app_id: str):
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def _counts(family: str) -> dict[str, int]:
+    from kafka_denormalization_spark.checkpoint import session_memo_counts
+
+    return session_memo_counts().get(family, {"hits": 0, "misses": 0})
+
+
+def test_session_memo_none_is_a_hit_and_families_stay_apart(spark):
+    """A stored None is a hit (resolve_auto_bucket_cap caches "no split"
+    as None), and two families whose remaining key fields coincide get
+    separate entries."""
+    from kafka_denormalization_spark.checkpoint import session_memo
+
+    calls = []
+
+    def build_none():
+        calls.append(1)
+        return None
+
+    key = ("test_none", "/same/dir")
+    assert session_memo(spark, key, build_none) is None
+    assert session_memo(spark, key, build_none) is None
+    assert len(calls) == 1, "a stored None was rebuilt"
+    assert _counts("test_none") == {"hits": 1, "misses": 1}
+
+    a = session_memo(spark, ("test_fam_a", "/same/dir"), object)
+    b = session_memo(spark, ("test_fam_b", "/same/dir"), object)
+    assert a is not b
+    assert session_memo(spark, ("test_fam_a", "/same/dir"), object) is a
+
+
+def test_session_memo_new_application_drops_previous_entries():
+    """A new applicationId evicts the previous application's entries:
+    returning to the old application rebuilds."""
+    from kafka_denormalization_spark.checkpoint import session_memo
+
+    old, new = _fake_session("test-app-old"), _fake_session("test-app-new")
+    first = session_memo(old, ("test_evict", 1), object)
+    assert session_memo(old, ("test_evict", 1), object) is first
+    assert session_memo(new, ("test_evict", 1), object) is not first
+    assert session_memo(old, ("test_evict", 1), object) is not first
+    assert _counts("test_evict") == {"hits": 1, "misses": 3}
+
+
+def test_session_memo_concurrent_misses_build_once(spark):
+    """Stress: many more threads than cores, a tiny switch interval, and
+    calls that mix same-key and distinct-key lookups. Every key's build
+    runs exactly once and every caller of a key gets the identical
+    object."""
+    import os
+    import sys
+    import threading
+    import time
+
+    from kafka_denormalization_spark.checkpoint import session_memo
+
+    n_threads = 4 * (os.cpu_count() or 4)
+    n_keys, rounds = 5, 20
+    keys = [("test_stress", i) for i in range(n_keys)]
+    builds = {k: 0 for k in keys}
+    seen: dict[tuple, list] = {k: [] for k in keys}
+    lock = threading.Lock()
+    start = threading.Barrier(n_threads)
+    errors: list[BaseException] = []
+
+    def build_for(key):
+        def build():
+            with lock:
+                builds[key] += 1
+            time.sleep(0.02)  # widen the window for a racing second build
+            return object()
+
+        return build
+
+    def worker(i: int) -> None:
+        try:
+            start.wait(timeout=30)
+            for r in range(rounds):
+                key = keys[(i + r) % n_keys]
+                value = session_memo(spark, key, build_for(key))
+                with lock:
+                    seen[key].append(value)
+        except BaseException as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    before = _counts("test_stress")
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=worker, args=(i,), daemon=True)
+            for i in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive(), "a memo caller hung"
+    finally:
+        sys.setswitchinterval(old_interval)
+
+    assert not errors, errors
+    assert builds == {k: 1 for k in keys}, builds
+    for key, values in seen.items():
+        assert values and all(v is values[0] for v in values), key
+    after = _counts("test_stress")
+    calls = n_threads * rounds
+    assert after["misses"] - before["misses"] == n_keys
+    assert after["hits"] - before["hits"] == calls - n_keys
+
+
+def test_session_memo_distinct_keys_build_in_parallel(spark):
+    """Two keys' builds overlap in time (preference_pair_dedup's two side
+    builds run on two driver threads): each build waits at a shared
+    barrier that only opens when both are inside their builds at once."""
+    import threading
+
+    from kafka_denormalization_spark.checkpoint import session_memo
+
+    both_building = threading.Barrier(2, timeout=30)
+
+    def build():
+        both_building.wait()
+        return object()
+
+    out: dict[int, object] = {}
+
+    def worker(i: int) -> None:
+        out[i] = session_memo(spark, ("test_parallel", i), build)
+
+    threads = [threading.Thread(target=worker, args=(i,), daemon=True) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive(), "a build hung"
+    assert not both_building.broken, "distinct keys were built one at a time"
+    assert out[0] is not out[1]

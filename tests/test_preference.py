@@ -114,9 +114,7 @@ def test_preference_pair_dedup_session_memo_matches_direct(spark, tmp_path):
     from kafka_denormalization_spark.functions.preference import (
         preference_pair_dedup,
     )
-    from kafka_denormalization_spark.functions.similarity import (
-        _LSH_PAIRS_SESSION_MEMO,
-    )
+    from kafka_denormalization_spark.checkpoint import session_memo_counts
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     alt = "completely different response about database join strategies"
@@ -143,13 +141,15 @@ def test_preference_pair_dedup_session_memo_matches_direct(spark, tmp_path):
         for r in preference_pair_dedup(prefs(), session_memo=True).collect()
     )
     assert memo1 == direct
-    n_entries = len(_LSH_PAIRS_SESSION_MEMO)
+    before = session_memo_counts()["lsh_pairs"]
     memo2 = sorted(
         r["pair_id"]
         for r in preference_pair_dedup(prefs(), session_memo=True).collect()
     )
     assert memo2 == direct
-    assert len(_LSH_PAIRS_SESSION_MEMO) == n_entries, (
+    after = session_memo_counts()["lsh_pairs"]
+    assert after["misses"] == before["misses"], (
         "a repeat call minted new side-pair memo entries instead of "
         "hitting the session memo"
     )
+    assert after["hits"] == before["hits"] + 2, "both sides must hit"

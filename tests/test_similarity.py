@@ -962,6 +962,72 @@ def test_embedding_debias_strips_common_direction(spark):
     )
 
 
+def test_embedding_family_shares_one_covariance_build(spark, tmp_path):
+    """embedding_covariance, embedding_pca and embedding_debias over one
+    corpus share the session-memoized means and covariance cuts: the
+    three queries together miss the truncation memo exactly twice (one
+    means cut, one covariance cut), and a repeat pass misses nothing."""
+    import shutil
+
+    from kafka_denormalization_spark.checkpoint import session_memo_counts
+    from kafka_denormalization_spark.queries import QUERIES
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_DIR, sf)
+
+    def truncate_misses() -> int:
+        return session_memo_counts().get("truncate", {"misses": 0})["misses"]
+
+    for expected in (2, 0):
+        before = truncate_misses()
+        for name in ("embedding_covariance", "embedding_pca", "embedding_debias"):
+            QUERIES[name](spark, sf).count()
+        assert truncate_misses() - before == expected
+
+
+def test_curation_heads_miss_once_per_family_key(spark, tmp_path):
+    """The families behind the four benchmarked curation heads build
+    once per key per session: the first pass over a fresh corpus copy
+    misses exactly once per family key (auto_cap has two keys: the
+    caption LSH buckets and the image dHash buckets; fuzzy_contamination
+    uses no session memo), and a second pass misses nothing."""
+    import shutil
+
+    from kafka_denormalization_spark.checkpoint import session_memo_counts
+    from kafka_denormalization_spark.queries import QUERIES
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_DIR, sf)
+    heads = [
+        "minhash_lsh_dedup",
+        "corpus_pipeline_v4",
+        "paired_dedup",
+        "fuzzy_contamination",
+    ]
+
+    def misses() -> dict[str, int]:
+        return {f: c["misses"] for f, c in session_memo_counts().items()}
+
+    def run_pass() -> dict[str, int]:
+        before = misses()
+        for name in heads:
+            QUERIES[name](spark, sf).count()
+        return {
+            f: n - before.get(f, 0)
+            for f, n in misses().items()
+            if n != before.get(f, 0)
+        }
+
+    assert run_pass() == {
+        "lsh_pairs": 1,
+        "auto_cap": 2,
+        "v4_stages": 1,
+        "paired_frame": 1,
+        "paired_audit": 1,
+    }
+    assert run_pass() == {}
+
+
 def test_pca_driver_model_matches_sql_formulation(spark):
     """The r12 driver-side power iteration (_pca_power_model) must be
     BIT-IDENTICAL to the prior in-Spark DECIMAL-fold formulation it
@@ -1127,9 +1193,9 @@ def test_auto_cap_probe_result_memoized(spark):
     """VERDICT r10 #3: the eager auto-cap probe stays eager but its
     scalar RESULT is memoized per (session, canonicalized bucket plan)
     — a second resolve over a semantically identical widths frame must
-    return the same cap without re-running the probe job."""
+    return the same cap from the memo without re-running the probe."""
+    from kafka_denormalization_spark.checkpoint import session_memo_counts
     from kafka_denormalization_spark.functions.similarity import (
-        _AUTO_CAP_MEMO,
         resolve_auto_bucket_cap,
     )
 
@@ -1141,17 +1207,13 @@ def test_auto_cap_probe_result_memoized(spark):
             .agg(F.count(F.lit(1)).alias("_w"))
         )
 
-    before = dict(_AUTO_CAP_MEMO)
     cap1 = resolve_auto_bucket_cap(widths(), 32, what="memo-test")
-    new_keys = set(_AUTO_CAP_MEMO) - set(before)
-    assert len(new_keys) == 1, "probe result was not memoized"
-    (key,) = new_keys
-    # poison the memo: a second call must hit it, not re-probe
-    _AUTO_CAP_MEMO[key] = 12345
-    assert resolve_auto_bucket_cap(widths(), 32, what="memo-test") == 12345
-    _AUTO_CAP_MEMO[key] = cap1
-    assert resolve_auto_bucket_cap(widths(), 32, what="memo-test") == cap1
-    del _AUTO_CAP_MEMO[key]
+    before = session_memo_counts()["auto_cap"]
+    cap2 = resolve_auto_bucket_cap(widths(), 32, what="memo-test")
+    after = session_memo_counts()["auto_cap"]
+    assert cap2 == cap1
+    assert after["misses"] == before["misses"], "repeat call re-probed"
+    assert after["hits"] == before["hits"] + 1, "repeat call missed the memo"
 
 
 def test_paired_audit_memoized_per_session(spark):

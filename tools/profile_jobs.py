@@ -25,9 +25,12 @@ LOG_DIR = "/tmp/sparklogs_plain"
 def build_session():
     from pyspark.sql import SparkSession
 
-    from kafka_denormalization_spark.engine import _configure_tws_protocol
+    from kafka_denormalization_spark.engine import (
+        _configure_tws_protocol,
+        session_cpus,
+    )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = session_cpus()
     os.makedirs(LOG_DIR, exist_ok=True)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
