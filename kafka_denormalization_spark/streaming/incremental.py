@@ -17,43 +17,60 @@ plays one micro-batch:
   JoinTransformer.java:138) — pass ``retract_fk_changes=False`` for
   bug-parity.
 
+State layout: ONE parquet table under ``state_dir/state``, partitioned by
+``bucket`` — the micro-batch twin of the reference's single compacted index
+topic with a composite key. A ``kind`` column tells its rows apart:
+
+- ``L``: left rows (key, fk, payload, version), bucketed by FK;
+- ``R``: right rows, bucketed by FK;
+- ``K``: the key index (key -> latest fk/version, NULL payload), bucketed
+  by KEY — FK-change detection and key-only left deletes look a key up
+  here, read pruned to the batch's key buckets.
+
+The left rows are bucketed by FK (not by left key) because both the join
+and the right-update fan-out are FK-addressed — the same reason the
+reference prefix-scans on the FK digest (schema/JoinKey.java:94-99).
+
 Scale notes (100 TB):
-- state is partitioned by pmod(xxhash64(fk), n_buckets): a micro-batch
-  rewrites ONLY the buckets it touches (dynamic partition overwrite), and
-  every read is partition-pruned to the touched buckets — merge cost is
-  O(touched state), not O(total state).
-- NO driver-side collect anywhere: touched-bucket pruning is a broadcast
-  semi-join on the partition column (Catalyst's dynamic partition pruning
-  turns it into directory-level pruning); bucket targets for the writer
-  come from the data itself via dynamic partition overwrite.
-- every bucket a batch touches gets a sentinel row (NULL key) so dynamic
-  overwrite rewrites it even when deletions empty it — otherwise stale
-  rows would survive on disk in deletion-only buckets.
-- the LEFT state is bucketed by FK (not by left key) because both the join
-  and the right-update fan-out are FK-addressed — the same reason the
-  reference prefix-scans on the FK digest (schema/JoinKey.java:94-99).
-  FK-change detection therefore needs a second, KEY-bucketed index
-  (key -> latest fk/version), read pruned to the batch's key buckets.
+- bucket = pmod(xxhash64(col), n_buckets). A micro-batch rewrites ONLY the
+  buckets it touches, with one merge and one dynamic-overwrite write of the
+  one table, so merge cost is O(touched state), not O(total state).
+- the touched-bucket sets come from two bounded driver collects per batch:
+  the batch's key, left-FK and right-FK bucket ids, then the old-FK bucket
+  ids of the resolved (checkpointed) FK moves and deletes. Each set holds at
+  most ``n_buckets`` ints whatever the data size, and every state read is a
+  static ``bucket IN (...)`` partition filter, so untouched bucket
+  directories are never scanned.
+- every bucket a batch touches gets a literal sentinel row (NULL key) so
+  dynamic overwrite rewrites it even when deletions empty it — otherwise
+  stale rows would survive on disk in deletion-only buckets. Reads drop
+  the sentinels.
 - per-FK skew concentrates a hot FK's lefts in one bucket; raise n_buckets
   or use the continuous mode's AQE-planned join for emit.
 - payloads are opaque JSON strings (the reference's serde-opaque values);
   the typed projection happens at the edges.
-- state paths go through Spark's Hadoop filesystem layer (no ``os.path``),
-  so ``state_dir`` may live on HDFS/S3, not just the driver's local disk.
+- state paths go through Spark's Hadoop filesystem layer (no ``os.path``
+  probes), so ``state_dir`` may live on HDFS/S3, not just the driver's
+  local disk.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_denormalization_spark.operators.latest import latest_per_key
+from kafka_denormalization_spark.streaming.sinks import fs_and_path
 
-_STATE_SCHEMA = "key string, fk string, payload string, version long, bucket int"
-_KEY_INDEX_SCHEMA = "key string, fk string, version long, kbucket int"
+_STATE_SCHEMA = "kind string, key string, fk string, payload string, version long, bucket int"
+_UPDATE_SCHEMA = "key string, fk string, payload string, version long"
+_CHANGELOG_SCHEMA = "key string, fk string, left_value string, right_value string"
+# the three-table layout this engine kept before its state became one table
+_OLD_LAYOUT = ("left", "right", "key_index")
 
 
 class IncrementalDenormalize:
@@ -87,123 +104,50 @@ class IncrementalDenormalize:
                 "tombstones=True requires retract_fk_changes=True (left "
                 "deletes are resolved through the key index)"
             )
+        fs, root = fs_and_path(spark, state_dir)
+        path = spark._jvm.org.apache.hadoop.fs.Path
+        old = [d for d in _OLD_LAYOUT if fs.exists(path(root, d))]
+        if old:
+            # this engine would see an empty state/ table and re-emit from
+            # scratch, silently ignoring the old state
+            raise ValueError(
+                f"{state_dir} holds state in the old three-table layout "
+                f"({', '.join(d + '/' for d in old)}); this engine keeps one "
+                "table under state/ — replay the changelog into a new state_dir"
+            )
         self.spark = spark
         self.state_dir = state_dir
         self.how = how
         self.n_buckets = n_buckets
         self.retract_fk_changes = retract_fk_changes
         self.tombstones = tombstones
-        self._left_dir = os.path.join(state_dir, "left")
-        self._right_dir = os.path.join(state_dir, "right")
-        self._key_index_dir = os.path.join(state_dir, "key_index")
+        self._table = os.path.join(state_dir, "state")
 
     # -- state helpers -------------------------------------------------------
 
-    def _bucket(self, col):
-        return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
+    def _bucket(self, col: str):
+        return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_buckets)).cast("int")
 
-    def _read(self, path: str, schema: str, prune: DataFrame | None, col: str) -> DataFrame:
-        """Read a bucketed state table, partition-pruned to the buckets in
-        ``prune`` (a 1-column DataFrame named ``col``). Pruning is a
-        broadcast semi-join on the partition column — dynamic partition
-        pruning skips the untouched directories at runtime; no driver
-        collect. Missing path (first batch) -> empty frame, whatever the
-        filesystem (probed by the read itself, not ``os.path``)."""
+    def _read(self, buckets: set[int], kind: str | None = None) -> DataFrame:
+        """State rows in ``buckets`` (a static partition filter: untouched
+        bucket directories are never scanned), optionally of one ``kind``.
+        No buckets, or no table yet (first batch) -> empty frame, whatever
+        the filesystem (probed by the read itself, not ``os.path``)."""
+        if not buckets:
+            return self.spark.createDataFrame([], _STATE_SCHEMA)
         try:
-            df = self.spark.read.schema(schema).parquet(path)
-            # force the scan to notice nonexistent paths eagerly
-            if not df.schema.fields:
-                return self.spark.createDataFrame([], schema)
+            df = self.spark.read.schema(_STATE_SCHEMA).parquet(self._table)
         except AnalysisException:
-            return self.spark.createDataFrame([], schema)
-        df = df.filter(F.col("key").isNotNull())  # drop writer sentinels
-        if prune is not None:
-            # the >= 0 predicate is vacuously true (pmod), but Catalyst's
-            # DynamicPartitionPruning rule only fires when the build side
-            # carries a selective predicate — with it, the scan shows
-            # `dynamicpruningexpression(bucket IN ...)` in PartitionFilters
-            # and skips untouched directories; without it, the semi-join
-            # filters ROWS but the scan lists every bucket
-            df = df.join(
-                F.broadcast(prune.filter(F.col(col) >= 0)), on=col, how="left_semi"
-            )
-        return df
+            return self.spark.createDataFrame([], _STATE_SCHEMA)
+        df = df.filter(F.col("bucket").isin(sorted(buckets)) & F.col("key").isNotNull())
+        return df if kind is None else df.filter(F.col("kind") == kind)
 
-    def _merge_state(
-        self, path: str, updates: DataFrame, deletes: DataFrame | None = None
-    ) -> None:
-        """Copy-on-write upsert: rewrite only the buckets the batch touches.
-
-        ``updates``: (key, fk, payload, version) rows to upsert (latest
-        version per (key, fk) wins). ``deletes``: (key, fk) pairs to remove.
-        Every touched bucket gets a NULL-key sentinel row so dynamic
-        partition overwrite rewrites it even if it ends up empty."""
-        updates = updates.withColumn("bucket", self._bucket(F.col("fk")))
-        touched = updates.select("bucket").distinct()
-        if deletes is not None:
-            touched = (
-                touched.unionByName(
-                    deletes.select(self._bucket(F.col("fk")).alias("bucket")).distinct()
-                ).distinct()
-            )
-        existing = self._read(path, _STATE_SCHEMA, touched, "bucket")
-        merged = latest_per_key(
-            existing.unionByName(updates), ["key", "fk"], ["version"]
-        )
-        if deletes is not None:
-            merged = merged.join(
-                F.broadcast(deletes.select("key", "fk")), ["key", "fk"], "left_anti"
-            )
-        sentinels = touched.select(
-            F.lit(None).cast("string").alias("key"),
-            F.lit(None).cast("string").alias("fk"),
-            F.lit(None).cast("string").alias("payload"),
-            F.lit(0).cast("long").alias("version"),
-            F.col("bucket"),
-        )
-        (
-            merged.unionByName(sentinels)
-            .repartition(F.col("bucket"))
-            .write.partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(path)
-        )
-
-    def _merge_key_index(
-        self, updates: DataFrame, deletes: DataFrame | None = None
-    ) -> None:
-        """Upsert (key -> latest fk/version) into the KEY-bucketed index;
-        ``deletes`` is a 1-column (key) frame of tombstoned keys. Same
-        sentinel discipline as ``_merge_state`` so a deletion-emptied
-        kbucket still gets rewritten."""
-        updates = updates.withColumn("kbucket", self._bucket(F.col("key")))
-        touched = updates.select("kbucket").distinct()
-        if deletes is not None:
-            touched = touched.unionByName(
-                deletes.select(self._bucket(F.col("key")).alias("kbucket")).distinct()
-            ).distinct()
-        existing = self._read(self._key_index_dir, _KEY_INDEX_SCHEMA, touched, "kbucket")
-        merged = latest_per_key(
-            existing.unionByName(updates), ["key"], ["version", "fk"]
-        )
-        if deletes is not None:
-            merged = merged.join(
-                F.broadcast(deletes.select("key")), ["key"], "left_anti"
-            )
-        sentinels = touched.select(
-            F.lit(None).cast("string").alias("key"),
-            F.lit(None).cast("string").alias("fk"),
-            F.lit(0).cast("long").alias("version"),
-            F.col("kbucket"),
-        )
-        (
-            merged.unionByName(sentinels)
-            .repartition(F.col("kbucket"))
-            .write.partitionBy("kbucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(self._key_index_dir)
+    def _rows(self, df: DataFrame, kind: str, by: str) -> DataFrame:
+        """(key, fk, payload, version) updates as state rows of ``kind``,
+        bucketed by column ``by``."""
+        return df.select(
+            F.lit(kind).alias("kind"), "key", "fk", "payload", "version",
+            self._bucket(by).alias("bucket"),
         )
 
     # -- one micro-batch -----------------------------------------------------
@@ -220,7 +164,7 @@ class IncrementalDenormalize:
         ``streaming.upsert_join.tag_side`` to project typed frames.
         """
         spark = self.spark
-        empty = spark.createDataFrame([], "key string, fk string, payload string, version long")
+        empty = spark.createDataFrame([], _UPDATE_SCHEMA)
         caches: list[DataFrame] = []
 
         def cached(df: DataFrame) -> DataFrame:
@@ -231,122 +175,162 @@ class IncrementalDenormalize:
         lu = cached((left_updates or empty).select("key", "fk", "payload", "version"))
         ru = cached((right_updates or empty).select("key", "fk", "payload", "version"))
 
-        stale = None
-        tomb_pairs = None
-        right_tomb_fks = None
-        stale_right_fks = None
+        # the batch's bucket ids: at most n_buckets ints per tag
+        tagged = [
+            lu.select(F.lit("L").alias("tag"), self._bucket("fk").alias("b")),
+            ru.select(F.lit("R").alias("tag"), self._bucket("fk").alias("b")),
+        ]
+        if self.retract_fk_changes:
+            tagged.append(lu.select(F.lit("K").alias("tag"), self._bucket("key").alias("b")))
+        sets: dict[str, set[int]] = {"K": set(), "L": set(), "R": set()}
+        for r in reduce(DataFrame.unionByName, tagged).distinct().collect():
+            sets[r["tag"]].add(r["b"])
+        if not (sets["L"] or sets["R"]):
+            # empty batch: nothing to merge, nothing to emit
+            for df in caches:
+                df.unpersist()
+            return spark.createDataFrame([], _CHANGELOG_SCHEMA)
+
+        deletes: list[DataFrame] = []  # (kind, key, fk) rows the merge drops
+        if self.tombstones:
+            # right side: resolve the batch's final value per key and split
+            # deletes out
+            ru_final = latest_per_key(ru, ["key"], ["version", "payload"])
+            rv = ru_final.filter(F.col("payload").isNotNull()).select(
+                "key", "fk", "payload", "version"
+            )
+            rt = ru_final.filter(F.col("payload").isNull()).select("key", "fk")
+            deletes.append(rt.select(F.lit("R").alias("kind"), "key", "fk"))
+        else:
+            rv, rt = ru, None
+
+        lu_apply = lu
+        stale = tomb_pairs = stale_right_fks = right_tomb_fks = None
+        old_buckets: set[int] = set()
         if self.retract_fk_changes:
             # per-batch winner per KEY (not per (key, fk)): an FK move is a
             # new association for the same key, and out-of-order stragglers
             # (version below the stored one) must not apply at all
             lu_latest = latest_per_key(lu, ["key"], ["version", "fk", "payload"])
-            kidx = self._read(
-                self._key_index_dir,
-                _KEY_INDEX_SCHEMA,
-                lu_latest.select(self._bucket(F.col("key")).alias("kbucket")).distinct(),
-                "kbucket",
-            ).select(
+            kidx = self._read(sets["K"], "K").select(
                 "key",
                 F.col("fk").alias("_old_fk"),
                 F.col("version").alias("_old_ver"),
             )
-            # EAGER checkpoint before any state write: this frame reads the
+            # EAGER checkpoint before the state write: this frame reads the
             # pre-merge key index, which the merge below overwrites — lazy
             # recomputation after the write would silently resolve against
             # the NEW index (no stale rows, no retractions). Truncating the
             # lineage pins the pre-merge view; the frame is batch-sized.
             resolved = lu_latest.join(kidx, on="key", how="left_outer").localCheckpoint()
-            winners = resolved.filter(
+            lw_vals = resolved.filter(
                 F.col("_old_ver").isNull() | (F.col("version") >= F.col("_old_ver"))
             )
             if self.tombstones:
                 # NULL payload = delete (Kafka compaction convention).
                 # The delete targets the INDEXED pair — a tombstone for an
                 # unindexed key is a no-op (continuous-mode parity).
-                lw_vals = winners.filter(F.col("payload").isNotNull())
-                lw_tombs = winners.filter(F.col("payload").isNull())
+                lw_tombs = lw_vals.filter(F.col("payload").isNull())
+                lw_vals = lw_vals.filter(F.col("payload").isNotNull())
                 tomb_pairs = lw_tombs.filter(F.col("_old_fk").isNotNull()).select(
                     "key", F.col("_old_fk").alias("fk")
                 )
-            else:
-                lw_vals = winners
-                lw_tombs = None
+                deletes.append(lw_tombs.select(
+                    F.lit("K").alias("kind"), "key", F.lit(None).cast("string").alias("fk")
+                ))
             lu_apply = lw_vals.select("key", "fk", "payload", "version")
             stale = lw_vals.filter(
                 F.col("_old_fk").isNotNull() & (F.col("_old_fk") != F.col("fk"))
             ).select("key", F.col("_old_fk").alias("fk"))
+            left_deletes = stale if tomb_pairs is None else stale.unionByName(tomb_pairs)
+            deletes.append(left_deletes.select(F.lit("L").alias("kind"), "key", "fk"))
+            old_buckets = {
+                r["b"]
+                for r in left_deletes.select(self._bucket("fk").alias("b")).distinct().collect()
+            }
             if self.how in ("inner", "right_outer"):
-                # Whether a stale (key, old_fk) pair was ever EMITTED depends
-                # on the right side as of emission time — approximate with
-                # the PRE-merge right state, captured here before any right
-                # write. Consulting post-merge rstate instead would miss the
+                # Retraction gates need the right side as of emission time —
+                # approximated by the PRE-merge right state, read once here
+                # for both gates: `stale` (did old_fk have a right, so the
+                # stale pair was ever emitted?) and `tomb` (did the
+                # tombstoned right exist?). Post-merge state would miss the
                 # retraction when old_fk's right is tombstoned in this same
                 # batch, and fabricate one when it first appears in this
                 # batch. Checkpointed for the same pre-merge-view reason as
-                # `resolved` above.
-                stale_right_fks = (
-                    self._read(
-                        self._right_dir,
-                        _STATE_SCHEMA,
-                        stale.select(self._bucket(F.col("fk")).alias("bucket")).distinct(),
-                        "bucket",
+                # `resolved`.
+                probes = stale.select(
+                    "fk", F.lit(None).cast("string").alias("_pkey"), F.lit("stale").alias("gate")
+                )
+                if rt is not None:
+                    probes = probes.unionByName(
+                        rt.select("fk", F.col("key").alias("_pkey"), F.lit("tomb").alias("gate"))
                     )
-                    .join(stale.select("fk").distinct(), ["fk"], "left_semi")
-                    .select("fk")
+                gated = (
+                    self._read(old_buckets | sets["R"], "R")
+                    .join(probes.distinct(), "fk")
+                    .filter((F.col("gate") == "stale") | (F.col("key") == F.col("_pkey")))
+                    .select("fk", "gate")
                     .distinct()
                     .localCheckpoint()
                 )
-            deletes = stale if tomb_pairs is None else stale.unionByName(tomb_pairs)
-            self._merge_state(self._left_dir, lu_apply, deletes=deletes)
-            self._merge_key_index(
-                lu_apply.select("key", "fk", "version"),
-                deletes=None if lw_tombs is None else lw_tombs.select("key"),
-            )
-        else:
-            lu_apply = lu
-            self._merge_state(self._left_dir, lu)
+                stale_right_fks = gated.filter(F.col("gate") == "stale").select("fk")
+                if rt is not None:
+                    right_tomb_fks = gated.filter(F.col("gate") == "tomb").select("fk")
 
-        if self.tombstones:
-            # right side: resolve the batch's final value per key, split
-            # deletes out, and remember which tombstoned rights actually
-            # existed BEFORE the merge (retraction gating) — checkpointed
-            # for the same pre-merge-view reason as `resolved` above
-            ru_final = latest_per_key(ru, ["key"], ["version", "payload"])
-            rv = ru_final.filter(F.col("payload").isNotNull()).select(
-                "key", "fk", "payload", "version"
+        # the merge: one read of every touched bucket (all kinds — a bucket
+        # is rewritten whole), the updates, one sentinel per touched bucket;
+        # latest row per (kind, key, fk) — per (kind, key) for the key index
+        touched = sets["K"] | sets["L"] | sets["R"] | old_buckets
+        parts = [
+            self._read(touched),
+            self._rows(lu_apply, "L", "fk"),
+            self._rows(rv, "R", "fk"),
+            spark.createDataFrame([(None, None, None, None, 0, b) for b in sorted(touched)], _STATE_SCHEMA),
+        ]
+        if self.retract_fk_changes:
+            parts.append(self._rows(
+                lu_apply.withColumn("payload", F.lit(None).cast("string")), "K", "key"
+            ))
+        merged = latest_per_key(
+            reduce(DataFrame.unionByName, parts)
+            .repartition("bucket")
+            .withColumn("_fk", F.when(F.col("kind") != "K", F.col("fk"))),
+            ["bucket", "kind", "key", "_fk"],
+            ["version", "fk"],
+        ).drop("_fk")
+        if deletes:
+            d = reduce(DataFrame.unionByName, deletes).select(
+                F.col("kind").alias("_dkind"), F.col("key").alias("_dkey"), F.col("fk").alias("_dfk")
             )
-            rt = ru_final.filter(F.col("payload").isNull()).select("key", "fk")
-            right_tomb_fks = (
-                self._read(
-                    self._right_dir,
-                    _STATE_SCHEMA,
-                    rt.select(self._bucket(F.col("fk")).alias("bucket")).distinct(),
-                    "bucket",
-                )
-                .join(rt, ["key", "fk"], "left_semi")
-                .select("fk")
-                .distinct()
-                .localCheckpoint()
+            merged = merged.join(
+                F.broadcast(d),
+                (F.col("kind") == F.col("_dkind"))
+                & (F.col("key") == F.col("_dkey"))
+                & ((F.col("_dkind") == "K") | (F.col("fk") == F.col("_dfk"))),
+                "left_anti",
             )
-            self._merge_state(self._right_dir, rv, deletes=rt)
-        else:
-            self._merge_state(self._right_dir, ru)
+        (
+            merged.write.partitionBy("bucket")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(self._table)
+        )
+        for df in caches:
+            df.unpersist()
 
-        # affected FK set drives every state read below (partition-pruned);
-        # stale old-FKs are included so retractions can look up their rights
+        # the reads below are pruned to the batch's FK buckets; the affected
+        # FK set narrows the right rows, stale old-FKs included so
+        # retractions can look up their rights
         left_fks = lu.select(F.col("fk")).distinct()
-        right_fks = cached(ru.select(F.col("fk")).distinct())
+        right_fks = ru.select(F.col("fk")).distinct()
         affected = left_fks.unionByName(right_fks)
         if stale is not None:
             affected = affected.unionByName(stale.select("fk"))
-        affected = cached(affected.distinct())
-        fk_buckets = affected.select(self._bucket(F.col("fk")).alias("bucket")).distinct()
+        affected = affected.distinct()
+        fk_buckets = sets["L"] | sets["R"] | old_buckets
 
-        lstate = self._read(self._left_dir, _STATE_SCHEMA, fk_buckets, "bucket")
-        rstate = cached(
-            self._read(self._right_dir, _STATE_SCHEMA, fk_buckets, "bucket")
-            .join(affected, ["fk"], "left_semi")
-        )
+        lstate = self._read(fk_buckets, "L")
+        rstate = self._read(fk_buckets, "R").join(affected, ["fk"], "left_semi")
 
         # lefts to emit: updated lefts + full fan-out for FKs whose right changed
         updated_left_keys = lu_apply.select("key", "fk").distinct()
@@ -410,7 +394,7 @@ class IncrementalDenormalize:
                 if retract_pairs is None
                 else retract_pairs.unionByName(tomb_pairs)
             )
-        if right_tomb_fks is not None and self.how in ("inner", "right_outer"):
+        if right_tomb_fks is not None:
             # right delete invalidates every previously-emitted pair for
             # that FK (continuous parity: right_deleted && right_existed).
             # The left-preserving flavors re-emit (left, NULL) through the
@@ -431,9 +415,6 @@ class IncrementalDenormalize:
                 F.lit(None).cast("string").alias("right_value"),
             )
             out = out.unionByName(retractions)
-
-        for df in caches:
-            df.unpersist()
         return out
 
     def foreach_batch(self, tag_left, tag_right, sink):

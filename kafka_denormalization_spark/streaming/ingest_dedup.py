@@ -66,8 +66,12 @@ class IngestDedup:
         except AnalysisException:
             return self.spark.createDataFrame([], _STATE_SCHEMA)
         df = df.filter(F.col("key").isNotNull())
-        # vacuously-true predicate so DynamicPartitionPruning fires on the
-        # partition column (same trick as incremental.py._read)
+        # the >= 0 predicate is vacuously true (pmod), but Catalyst's
+        # DynamicPartitionPruning rule only fires when the build side
+        # carries a selective predicate — with it, the scan shows
+        # `dynamicpruningexpression(bucket IN ...)` in PartitionFilters and
+        # skips untouched bucket directories; without it, the semi-join
+        # filters ROWS but the scan reads every bucket
         return df.join(
             F.broadcast(prune.filter(F.col("bucket") >= 0)),
             on="bucket",

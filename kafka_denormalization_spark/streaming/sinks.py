@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _fs_and_path(spark: SparkSession, path: str):
+def fs_and_path(spark: SparkSession, path: str):
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -43,7 +43,7 @@ def idempotent_foreach_batch(
     jvm = spark._jvm
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        fs, dirp = _fs_and_path(spark, commit_dir)
+        fs, dirp = fs_and_path(spark, commit_dir)
         marker = jvm.org.apache.hadoop.fs.Path(commit_dir, str(epoch_id))
         if fs.exists(marker):
             return  # replayed epoch: already committed downstream

@@ -5,7 +5,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Test-session sizing (VERDICT r12 #3 — the graded pytest run outgrew
 # the driver's time window): the suite's wall clock is dominated by

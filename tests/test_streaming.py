@@ -858,6 +858,69 @@ def test_incremental_tombstones_require_key_index(spark, tmpdir):
         )
 
 
+@pytest.mark.parametrize("old", ["left", "right", "key_index"])
+def test_incremental_refuses_three_table_layout(spark, tmpdir, old):
+    """State written in the old left/right/key_index layout would read as
+    empty under the one-table layout and re-emit from scratch — refuse it."""
+    state = os.path.join(tmpdir, "st_old_" + old)
+    os.makedirs(os.path.join(state, old, "bucket=0"))
+    with pytest.raises(ValueError, match="three-table layout"):
+        IncrementalDenormalize(spark, state)
+
+
+def _state_files(state_dir):
+    """{path relative to the state table: bytes} for every file in it."""
+    root = os.path.join(state_dir, "state")
+    snap = {}
+    for dirpath, _dirs, names in os.walk(root):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as fh:
+                snap[os.path.relpath(path, root)] = fh.read()
+    return snap
+
+
+def _bucket_files(state_dir):
+    """{bucket id: {file: bytes}} of the state table's bucket directories."""
+    out = {}
+    for rel, data in _state_files(state_dir).items():
+        top = rel.split(os.sep)[0]
+        if top.startswith("bucket="):
+            out.setdefault(int(top.split("=")[1]), {})[rel] = data
+    return out
+
+
+_LOAD_LEFTS = [(f"c{i}", str(100 + i % 20), f'{{"t":{i}}}', 1) for i in range(200)]
+_LOAD_RIGHTS = [(str(100 + j), str(100 + j), f'{{"s":{j}}}', 1) for j in range(20)]
+
+
+def test_incremental_rewrites_only_touched_buckets(spark, tmpdir):
+    """A right update on one FK rewrites only that FK's bucket: every other
+    bucket directory keeps its file names and bytes."""
+    state = os.path.join(tmpdir, "st_prune")
+    eng = IncrementalDenormalize(spark, state, how="inner", n_buckets=32)
+    eng.process_batch(_mkdf(spark, _LOAD_LEFTS), _mkdf(spark, _LOAD_RIGHTS)).collect()
+    before = _bucket_files(state)
+    assert len(before) > 16  # key-index rows spread the load over most buckets
+    out = eng.process_batch(None, _mkdf(spark, [("105", "105", '{"s":"new"}', 2)])).collect()
+    assert sorted(r["key"] for r in out) == sorted(k for k, fk, _, _ in _LOAD_LEFTS if fk == "105")
+    hot = spark.range(1).select(F.pmod(F.xxhash64(F.lit("105")), F.lit(32))).first()[0]
+    after = _bucket_files(state)
+    assert set(after) == set(before)
+    assert after[hot] != before[hot]
+    assert {b for b in before if after[b] != before[b]} == {hot}
+
+
+def test_incremental_empty_batch_changes_nothing(spark, tmpdir):
+    """Both sides None: nothing is emitted and no state file changes."""
+    state = os.path.join(tmpdir, "st_empty")
+    eng = IncrementalDenormalize(spark, state, how="full_outer", n_buckets=32)
+    eng.process_batch(_mkdf(spark, _LOAD_LEFTS), _mkdf(spark, _LOAD_RIGHTS)).collect()
+    before = _state_files(state)
+    assert eng.process_batch(None, None).collect() == []
+    assert _state_files(state) == before
+
+
 def test_idempotent_foreach_batch_skips_replayed_epoch(spark, tmp_path):
     """Replaying an epoch id (restart-after-sink-write crash window) must
     not re-run the sink body; new epochs still run."""

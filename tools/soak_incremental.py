@@ -11,11 +11,14 @@ Usage: python tools/soak_incremental.py [sf_dir] [n_batches]
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -52,6 +55,7 @@ def main() -> int:
     )
 
     state_dir = tempfile.mkdtemp(prefix="soak_state_")
+    atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
     eng = IncrementalDenormalize(spark, state_dir, how="inner", n_buckets=32)
 
     t0 = time.perf_counter()
