@@ -291,11 +291,10 @@ def main() -> None:
         pass
 
     names = [n for n in BENCH_QUERIES if n in QUERIES]
-    extra = [n for n in QUERIES if n not in names and n in _EXTRA_BENCH]
     timings: dict[str, float] = {}
     phases: dict[str, dict[str, float]] = {}
     errors: dict[str, str] = {}
-    for name in names + extra:
+    for name in names:
         fn = QUERIES[name]
         # per-query fault isolation: one broken query must not zero out the
         # timings for the healthy ones — record its error and keep going
@@ -438,8 +437,6 @@ def main() -> None:
             json.dump(sidecar, fh, indent=1)
     print(json.dumps(out), flush=True)
 
-
-_EXTRA_BENCH: set[str] = set()  # extension queries opt in here as they land
 
 if __name__ == "__main__":
     main()

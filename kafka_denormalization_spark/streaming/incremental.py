@@ -31,13 +31,25 @@ The left rows are bucketed by FK (not by left key) because both the join
 and the right-update fan-out are FK-addressed — the same reason the
 reference prefix-scans on the FK digest (schema/JoinKey.java:94-99).
 
+``state_dir/_batch/`` holds the batch's two pre-merge views, rewritten by
+every ``process_batch`` before the state write: ``resolved`` (the batch's
+latest left per key joined to the key index it replaces) and ``gated``
+(the ``(fk, gate)`` retraction gates read from the pre-merge right rows).
+Read back from parquet, each carries its real file size into the planner,
+so the emit broadcasts a small view against an unshuffled state scan and
+a large backfill batch keeps shuffle joins.
+
+The returned changelog is lazy: it reads ``_batch/`` and the state table
+when it runs, so materialize it (``foreach_batch``'s sink does) before the
+next ``process_batch`` overwrites them.
+
 Scale notes (100 TB):
 - bucket = pmod(xxhash64(col), n_buckets). A micro-batch rewrites ONLY the
   buckets it touches, with one merge and one dynamic-overwrite write of the
   one table, so merge cost is O(touched state), not O(total state).
 - the touched-bucket sets come from two bounded driver collects per batch:
   the batch's key, left-FK and right-FK bucket ids, then the old-FK bucket
-  ids of the resolved (checkpointed) FK moves and deletes. Each set holds at
+  ids of the resolved (pinned) FK moves and deletes. Each set holds at
   most ``n_buckets`` ints whatever the data size, and every state read is a
   static ``bucket IN (...)`` partition filter, so untouched bucket
   directories are never scanned.
@@ -142,6 +154,14 @@ class IncrementalDenormalize:
         df = df.filter(F.col("bucket").isin(sorted(buckets)) & F.col("key").isNotNull())
         return df if kind is None else df.filter(F.col("kind") == kind)
 
+    def _pin(self, df: DataFrame, name: str) -> DataFrame:
+        """Write ``df`` to ``_batch/<name>`` and read it back: the view is
+        fixed as of now (a later state write cannot change it) and the
+        planner sizes it by its files."""
+        path = os.path.join(self.state_dir, "_batch", name)
+        df.write.mode("overwrite").parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
+
     def _rows(self, df: DataFrame, kind: str, by: str) -> DataFrame:
         """(key, fk, payload, version) updates as state rows of ``kind``,
         bucketed by column ``by``."""
@@ -217,12 +237,11 @@ class IncrementalDenormalize:
                 F.col("fk").alias("_old_fk"),
                 F.col("version").alias("_old_ver"),
             )
-            # EAGER checkpoint before the state write: this frame reads the
-            # pre-merge key index, which the merge below overwrites — lazy
+            # pinned before the state write: this frame reads the pre-merge
+            # key index, which the merge below overwrites — lazy
             # recomputation after the write would silently resolve against
-            # the NEW index (no stale rows, no retractions). Truncating the
-            # lineage pins the pre-merge view; the frame is batch-sized.
-            resolved = lu_latest.join(kidx, on="key", how="left_outer").localCheckpoint()
+            # the NEW index (no stale rows, no retractions)
+            resolved = self._pin(lu_latest.join(kidx, on="key", how="left_outer"), "resolved")
             lw_vals = resolved.filter(
                 F.col("_old_ver").isNull() | (F.col("version") >= F.col("_old_ver"))
             )
@@ -256,8 +275,9 @@ class IncrementalDenormalize:
                 # tombstoned right exist?). Post-merge state would miss the
                 # retraction when old_fk's right is tombstoned in this same
                 # batch, and fabricate one when it first appears in this
-                # batch. Checkpointed for the same pre-merge-view reason as
-                # `resolved`.
+                # batch. Pinned for the same pre-merge-view reason as
+                # `resolved`. Its readers are semi-joins, so duplicate
+                # (fk, gate) rows are harmless and not removed.
                 probes = stale.select(
                     "fk", F.lit(None).cast("string").alias("_pkey"), F.lit("stale").alias("gate")
                 )
@@ -265,13 +285,12 @@ class IncrementalDenormalize:
                     probes = probes.unionByName(
                         rt.select("fk", F.col("key").alias("_pkey"), F.lit("tomb").alias("gate"))
                     )
-                gated = (
+                gated = self._pin(
                     self._read(old_buckets | sets["R"], "R")
-                    .join(probes.distinct(), "fk")
+                    .join(probes, "fk")
                     .filter((F.col("gate") == "stale") | (F.col("key") == F.col("_pkey")))
-                    .select("fk", "gate")
-                    .distinct()
-                    .localCheckpoint()
+                    .select("fk", "gate"),
+                    "gated",
                 )
                 stale_right_fks = gated.filter(F.col("gate") == "stale").select("fk")
                 if rt is not None:
@@ -320,20 +339,21 @@ class IncrementalDenormalize:
 
         # the reads below are pruned to the batch's FK buckets; the affected
         # FK set narrows the right rows, stale old-FKs included so
-        # retractions can look up their rights
-        left_fks = lu.select(F.col("fk")).distinct()
-        right_fks = ru.select(F.col("fk")).distinct()
-        affected = left_fks.unionByName(right_fks)
+        # retractions can look up their rights. The FK and key sets are only
+        # ever semi/anti-join build sides, where duplicates cannot change
+        # the result, so they are not de-duplicated (each distinct would be
+        # one more shuffle per batch).
+        right_fks = ru.select("fk")
+        affected = lu.select("fk").unionByName(right_fks)
         if stale is not None:
             affected = affected.unionByName(stale.select("fk"))
-        affected = affected.distinct()
         fk_buckets = sets["L"] | sets["R"] | old_buckets
 
         lstate = self._read(fk_buckets, "L")
         rstate = self._read(fk_buckets, "R").join(affected, ["fk"], "left_semi")
 
         # lefts to emit: updated lefts + full fan-out for FKs whose right changed
-        updated_left_keys = lu_apply.select("key", "fk").distinct()
+        updated_left_keys = lu_apply.select("key", "fk")
         emit_updated = lstate.join(updated_left_keys, ["key", "fk"], "left_semi")
         emit_fanout = lstate.join(right_fks, ["fk"], "left_semi")
         lefts = emit_updated.unionByName(emit_fanout).dropDuplicates(["key", "fk"])
@@ -359,7 +379,7 @@ class IncrementalDenormalize:
             # rights (updated this batch) with zero lefts -> (null, right)
             # (JoinTransformer.java:192-196)
             updated_rights = rstate.join(right_fks, ["fk"], "left_semi")
-            no_lefts = updated_rights.join(lstate.select("fk").distinct(), ["fk"], "left_anti")
+            no_lefts = updated_rights.join(lstate.select("fk"), ["fk"], "left_anti")
             extras = no_lefts.select(
                 F.lit(None).cast("string").alias("key"),
                 F.col("fk"),

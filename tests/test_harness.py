@@ -37,3 +37,19 @@ def test_bench_sidecar_without_cpus_field_is_32c():
 
     assert bench.sidecar_cpus({"queries": {"q": 1.0}}) == 32
     assert bench.sidecar_cpus({"cpus": 8, "queries": {}}) == 8
+
+
+def test_oracle_check_puts_this_checkout_first_on_sys_path(monkeypatch):
+    """The batch benchmark's check loads tools/oracle_check.py; the root it
+    puts first on sys.path must be the checkout the file lives in, so a run
+    from any other checkout imports that checkout's code."""
+    import importlib.util
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location("checks", os.path.join(root, "perfbench", "checks.py"))
+    checks = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(checks)
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    checks.load_oracle_check(root)
+    assert sys.path[0] == root

@@ -1829,3 +1829,72 @@ def test_ingest_resize_dedup_streaming_e2e(spark, tmp_path):
     assert sorted(got) == [1, 2, 11], got
     # every survivor is a 9x8 FAKB thumbnail (12-byte header + 72 px)
     assert set(got.values()) == {(9, 8, 84)}
+
+
+def _mixed_batches():
+    """A load batch, then one batch with an FK move (c1 101 -> 105), a
+    key-only left tombstone (c2) and a right tombstone (story 102), then a
+    right update that fans out (story 103)."""
+    return [
+        (_LOAD_LEFTS, _LOAD_RIGHTS),
+        (
+            [("c1", "105", '{"t":"moved"}', 2), ("c2", None, None, 2)],
+            [("102", "102", None, 2)],
+        ),
+        (None, [("103", "103", '{"s":"new"}', 3)]),
+    ]
+
+
+def _replay(spark, root, how, batches):
+    """(rows, executed plan) of each batch's changelog; rows are sorted
+    tuples, collected before the next batch runs. Each side of a batch is
+    read from a parquet file, as a file source hands it to ``foreachBatch``,
+    so the planner knows its size (a frame over an RDD of local rows has
+    none, so the planner never broadcasts it)."""
+    eng = IncrementalDenormalize(spark, os.path.join(root, "state"), how=how)
+
+    def side(rows, name):
+        if not rows:
+            return None
+        path = os.path.join(root, name)
+        _mkdf(spark, rows).write.parquet(path)
+        return spark.read.parquet(path)
+
+    out = []
+    for i, (lefts, rights) in enumerate(batches):
+        df = eng.process_batch(side(lefts, f"left{i}"), side(rights, f"right{i}"))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        out.append((sorted(map(tuple, df.collect()), key=repr), plan))
+    return out
+
+
+def test_incremental_small_batch_emit_plan_has_no_shuffle_join(spark, tmpdir):
+    """The pinned pre-merge views are read back from parquet, so the
+    planner sizes them by their files: a small batch's emit broadcasts
+    them against the state scan — no sort-merge join shuffling the state,
+    no runtime bloom filter built from it."""
+    _, (rows, plan) = _replay(spark, os.path.join(tmpdir, "plan"), "inner", _mixed_batches()[:2])
+    for node in ("bloom_filter_agg", "might_contain", "SortMergeJoin"):
+        assert node not in plan, node
+    dead = [(k, "102", None, None) for k, fk, _, _ in _LOAD_LEFTS if fk == "102"]
+    assert rows == sorted(
+        dead + [("c1", "101", None, None), ("c1", "105", '{"t":"moved"}', '{"s":5}')],
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize("how", ["inner", "full_outer"])
+def test_incremental_shuffle_join_fallback_emits_the_same(spark, tmpdir, how):
+    """With broadcasts off (the plan a large backfill batch gets) every
+    batch emits exactly what the default plan emits."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    want = _replay(spark, os.path.join(tmpdir, "bc"), how, _mixed_batches())
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        got = _replay(spark, os.path.join(tmpdir, "smj"), how, _mixed_batches())
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" in got[1][1]
+    assert [rows for rows, _ in got] == [rows for rows, _ in want]
+    assert all(rows for rows, _ in want[1:])

@@ -26,11 +26,12 @@ Usage: python tools/bench_phash_skew.py [n_flat]
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

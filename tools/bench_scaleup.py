@@ -8,10 +8,11 @@ Usage: python tools/bench_scaleup.py [op ...]   (default: the round-5 ops)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -7,9 +7,11 @@ Usage: python tools/explain_dump.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import BENCH_QUERIES
 from kafka_denormalization_spark.engine import get_spark
@@ -39,7 +41,7 @@ def main() -> None:
     lines.append("")
     for name, plan in plans:
         lines.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote docs/PLANS.md")
 

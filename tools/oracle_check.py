@@ -15,12 +15,13 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_denormalization_spark.engine import TABLES, get_spark
 from __spark_entry__ import oracle_sql, queries

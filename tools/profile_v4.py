@@ -13,10 +13,11 @@ Usage: python tools/profile_v4.py
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_denormalization_spark.engine import get_spark
 
