@@ -210,10 +210,16 @@ def session_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
     ``key[0]`` is the family tag (e.g. ``("paired_audit", sf_dir)``):
     it keeps families whose remaining fields have the same shape apart
     and labels the hit/miss counts of :func:`session_memo_counts`. A
-    stored None is a hit like any other value.
+    stored None is a hit like any other value. The families:
+    ``schema`` (``engine.table``'s inferred parquet schemas),
+    ``auto_cap``, ``lsh_pairs``, ``fuzzy``
+    (``fuzzy_contamination_session``), ``cc``, ``truncate``,
+    ``paired_survivors``, ``paired_frame``, ``paired_audit``,
+    ``v3_mixed``, ``v4_stages`` and ``z_plan``.
 
     Same-session, same-data contract: a key names a PLAN (a plan hash,
-    or an input path plus parameters), not the data behind it.
+    or an input path plus parameters), not the data behind it (the
+    ``schema`` family alone also keys on the file's status).
     Re-building the same plan over a source that was overwritten or
     appended to mid-session returns the result for the OLD data. The
     engine's consumers read immutable snapshot directories, so this is

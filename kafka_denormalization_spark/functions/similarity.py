@@ -964,6 +964,54 @@ def fuzzy_contamination(
     return out
 
 
+def fuzzy_contamination_session(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    evals: DataFrame,
+    eval_id_col: str = "eval_id",
+    eval_text_col: str = "prompt",
+    threshold: float = 0.8,
+    n: int = 3,
+    num_hashes: int = 64,
+    bands: int = 32,
+) -> DataFrame:
+    """Session-memoized :func:`fuzzy_contamination` (always
+    ``eager_cleanup=True``), the twin of :func:`minhash_lsh_pairs_session`:
+    repeated calls with semantically identical ``docs`` and ``evals``
+    plans (:func:`~kafka_denormalization_spark.checkpoint.plan_key`) and
+    the same parameters return the SAME persisted result without
+    re-running the eval-id probe or the gram/band/verify pipeline. The
+    eval-set validation runs inside the build, and ``session_memo``
+    stores nothing when the build raises, so a bad eval set raises on
+    every call. When a plan hash is unavailable (Spark Connect), this
+    degrades to a plain un-memoized call.
+
+    Ownership: the memo owns the persisted result for the session;
+    callers must NOT unpersist it. Callers needing private lifecycle
+    control should call :func:`fuzzy_contamination` directly.
+    """
+
+    def build() -> DataFrame:
+        return fuzzy_contamination(
+            docs, id_col, text_col, evals, eval_id_col, eval_text_col,
+            threshold=threshold, n=n, num_hashes=num_hashes, bands=bands,
+            eager_cleanup=True,
+        )
+
+    doc_sem, eval_sem = plan_key(docs), plan_key(evals)
+    if doc_sem is None or eval_sem is None:  # pragma: no cover - Spark Connect fallback
+        return build()
+    return session_memo(
+        docs.sparkSession,
+        (
+            "fuzzy", doc_sem, eval_sem, id_col, text_col, eval_id_col,
+            eval_text_col, threshold, n, num_hashes, bands,
+        ),
+        build,
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:

@@ -1686,7 +1686,8 @@ def q_pref_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-match eval decontamination (functions/similarity.py
-    fuzzy_contamination — the fuzzy lexical tier between
+    fuzzy_contamination, session-memoized through
+    fuzzy_contamination_session — the fuzzy lexical tier between
     contamination_scan's exact n-gram overlap and
     semantic_contamination's embedding similarity): a document is
     contaminated iff its 3-gram Jaccard with ANY eval text reaches 0.8;
@@ -1704,9 +1705,8 @@ def q_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(" ", F.slice(t, 1, F.size(t) - F.lit(2))),
         ).alias("prompt"),
     ).filter(F.col("prompt").isNotNull())
-    return sim_fns.fuzzy_contamination(
-        docs, "doc_id", "text", evals, "eval_id", "prompt",
-        threshold=0.8, eager_cleanup=True,
+    return sim_fns.fuzzy_contamination_session(
+        docs, "doc_id", "text", evals, "eval_id", "prompt", threshold=0.8,
     )
 
 

@@ -48,7 +48,8 @@ Scale notes (100 TB):
   buckets it touches, with one merge and one dynamic-overwrite write of the
   one table, so merge cost is O(touched state), not O(total state).
 - the touched-bucket sets come from two bounded driver collects per batch:
-  the batch's key, left-FK and right-FK bucket ids, then the old-FK bucket
+  the batch's key, left-FK, right-FK and tombstoned-right bucket ids (the
+  last bound the ``gated`` read), then the old-FK bucket
   ids of the resolved (pinned) FK moves and deletes. Each set holds at
   most ``n_buckets`` ints whatever the data size, and every state read is a
   static ``bucket IN (...)`` partition filter, so untouched bucket
@@ -196,13 +197,21 @@ class IncrementalDenormalize:
         ru = cached((right_updates or empty).select("key", "fk", "payload", "version"))
 
         # the batch's bucket ids: at most n_buckets ints per tag
+        r_tag = F.lit("R")
+        if self.tombstones:
+            # a tombstoned right's bucket is tagged T as well (the only
+            # right-update buckets `gated` reads), in the same scan of
+            # `ru`: one more branch over a cached frame is one more job
+            r_tag = F.explode(F.array_compact(
+                F.array(r_tag, F.when(F.col("payload").isNull(), F.lit("T")))
+            ))
         tagged = [
             lu.select(F.lit("L").alias("tag"), self._bucket("fk").alias("b")),
-            ru.select(F.lit("R").alias("tag"), self._bucket("fk").alias("b")),
+            ru.select(r_tag.alias("tag"), self._bucket("fk").alias("b")),
         ]
         if self.retract_fk_changes:
             tagged.append(lu.select(F.lit("K").alias("tag"), self._bucket("key").alias("b")))
-        sets: dict[str, set[int]] = {"K": set(), "L": set(), "R": set()}
+        sets: dict[str, set[int]] = {"K": set(), "L": set(), "R": set(), "T": set()}
         for r in reduce(DataFrame.unionByName, tagged).distinct().collect():
             sets[r["tag"]].add(r["b"])
         if not (sets["L"] or sets["R"]):
@@ -286,7 +295,7 @@ class IncrementalDenormalize:
                         rt.select("fk", F.col("key").alias("_pkey"), F.lit("tomb").alias("gate"))
                     )
                 gated = self._pin(
-                    self._read(old_buckets | sets["R"], "R")
+                    self._read(old_buckets | sets["T"], "R")
                     .join(probes, "fk")
                     .filter((F.col("gate") == "stale") | (F.col("key") == F.col("_pkey")))
                     .select("fk", "gate"),

@@ -67,3 +67,52 @@ def test_target_partitions_non_numeric_conf(spark):
 
     # must not raise; falls back to defaultParallelism
     assert target_partitions(_Sess()) == spark.sparkContext.defaultParallelism
+
+
+def _mono(spark, tmp_path, name="mono_plans.parquet"):
+    path = str(tmp_path / name)
+    spark.range(200).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_parallelize_scan_spreads_row_preserving_plans(spark, tmp_path):
+    # a limit, a local sort and a broadcast-hinted join keep the
+    # monolithic scan's single partition, so they must not count as
+    # "already parallel": each reaches the probe and is spread
+    mono = _mono(spark, tmp_path)
+    small = spark.range(50)
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    # a target of at least 3 partitions, whatever the host's core count
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        for df in (
+            mono.limit(150),
+            mono.sortWithinPartitions("id"),
+            mono.join(F.broadcast(small), "id"),
+        ):
+            out = parallelize_scan(df, "id")
+            assert out is not df
+            assert out.rdd.getNumPartitions() == target_partitions(spark)
+            assert sorted(r["id"] for r in out.collect()) == sorted(
+                r["id"] for r in df.collect()
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def test_parallelize_scan_skips_redistributing_plans(spark, tmp_path):
+    # nodes that guarantee an exchange still pass through untouched
+    from pyspark.sql import Window
+
+    mono = _mono(spark, tmp_path)
+    other = _mono(spark, tmp_path, "mono_other.parquet")
+    for df in (
+        mono.orderBy("id"),
+        mono.join(other, "id"),
+        mono.groupBy((F.col("id") % 7).alias("k")).count(),
+        mono.withColumn("rn", F.row_number().over(Window.partitionBy("id").orderBy("id"))),
+        mono.dropDuplicates(["id"]),
+        mono.repartition(3),
+        mono.repartition(3, "id"),
+    ):
+        assert parallelize_scan(df, "id") is df

@@ -989,8 +989,8 @@ def test_curation_heads_miss_once_per_family_key(spark, tmp_path):
     """The families behind the four benchmarked curation heads build
     once per key per session: the first pass over a fresh corpus copy
     misses exactly once per family key (auto_cap has two keys: the
-    caption LSH buckets and the image dHash buckets; fuzzy_contamination
-    uses no session memo), and a second pass misses nothing."""
+    caption LSH buckets and the image dHash buckets), and a second pass
+    misses nothing."""
     import shutil
 
     from kafka_denormalization_spark.checkpoint import session_memo_counts
@@ -1019,13 +1019,52 @@ def test_curation_heads_miss_once_per_family_key(spark, tmp_path):
         }
 
     assert run_pass() == {
+        "schema": 1,
         "lsh_pairs": 1,
         "auto_cap": 2,
+        "fuzzy": 1,
         "v4_stages": 1,
         "paired_frame": 1,
         "paired_audit": 1,
     }
     assert run_pass() == {}
+
+
+def test_warm_benchmark_pass_builds_launch_no_jobs(spark, tmp_path, monkeypatch):
+    """A second pass of the benchmarked batch queries (perfbench's
+    ``Batch.queries``: the four curation heads and the five FK
+    denormalizations) over one corpus builds every frame from session
+    memos: the builds launch no Spark job (no schema inference, no eager
+    probe or cut). Jobs are read through the status tracker's job
+    group."""
+    import os
+    import shutil
+
+    from kafka_denormalization_spark.queries import QUERIES
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+    )
+    from workloads import Batch
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(os.path.join(os.path.dirname(SF_DIR), "sf0.01"), sf)
+    sc = spark.sparkContext
+
+    def build_jobs(group: str) -> dict[str, int]:
+        jobs = {}
+        for name in Batch.queries:
+            sc.setJobGroup(f"{group}-{name}", name)
+            try:
+                df = QUERIES[name](spark, sf)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"{group}-{name}"))
+            df.count()
+        return jobs
+
+    assert sum(build_jobs("cold").values()) > 0
+    assert build_jobs("warm") == {name: 0 for name in Batch.queries}
 
 
 def test_pca_driver_model_matches_sql_formulation(spark):
